@@ -52,12 +52,21 @@ object Sinks {
     * the PRUNED set of touched partitions is the Spark-native equivalent
     * (same shape as RiskCtrl.rtpLedgerMerge).
     *
-    * Scale shape: the incoming batch is small (only changed groups), so its
-    * key set broadcasts; the existing-side read is pruned to the partitions
-    * the batch touches (partition filter → listing prunes); cost is one
-    * rewrite of the touched slices, identical to the reference's
-    * delete+insert. localCheckpoint materializes the merge before the
-    * overwrite deletes the files it was read from.
+    * Shape, four Spark jobs per upsert (SinksSpec counts them):
+    *  - the batch is materialized once (`localCheckpoint`), because it may
+    *    come off a streaming `foreachBatch` plan and is read three times
+    *    below (a batch whose own plan shuffles adds its stages here);
+    *  - its touched partition values are deduplicated inside each batch
+    *    partition and collected (one job, no shuffle);
+    *  - the existing table is read with the batch's schema (no footer
+    *    inference job), pruned to the touched partitions, and anti-joined
+    *    against the broadcast batch keys (one job; a left-anti join needs no
+    *    unique build keys, so there is no `distinct`);
+    *  - survivors ∪ batch go straight to a dynamic partition overwrite (one
+    *    job). Reading the partitions being replaced is safe here: dynamic
+    *    overwrite stages the new files under `.spark-staging-*` and deletes
+    *    a target partition only at job commit, after every task has read
+    *    it, so the merge needs no second pin.
     *
     * Cost model at 100 TB (vs a transactional MERGE, unavailable here — no
     * Delta/Iceberg jars in the environment): write amplification is bounded
@@ -80,10 +89,11 @@ object Sinks {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val spark = batch.sparkSession
     val b = batch.localCheckpoint() // batch may come off a streaming plan
-    val touched = b.select(partitionCols.map(col): _*).distinct().collect()
+    val touched = b.select(partitionCols.map(col): _*).rdd
+      .mapPartitions(_.toSet.iterator).collect().distinct
     if (touched.isEmpty) return
     val existing =
-      try Some(spark.read.parquet(path))
+      try Some(spark.read.schema(b.schema).parquet(path))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     val merged = existing match {
       case None => b
@@ -95,13 +105,13 @@ object Sinks {
         val partFilter = touched.map(r => partitionCols.zipWithIndex
           .map { case (c, i) => col(c) <=> lit(r.get(i)) }
           .reduce(_ && _)).reduce(_ || _)
-        val bKeys = b.select(keyCols.map(col): _*).distinct().alias("bk")
+        val bKeys = b.select(keyCols.map(col): _*).alias("bk")
         val anti = keyCols.map(c => col(s"old.$c") <=> col(s"bk.$c")).reduce(_ && _)
         val survivors = old.filter(partFilter).alias("old")
           .join(broadcast(bKeys), anti, "left_anti")
         survivors.select(b.columns.map(col): _*).unionByName(b)
     }
-    overwriteSlices(merged.localCheckpoint(), path, partitionCols)
+    overwriteSlices(merged, path, partitionCols)
   }
 
   /** S3: plain append (task publication, first write of a table). */
@@ -181,16 +191,6 @@ object Sinks {
       .sortWithinPartitions(clusterCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
-
-  /** S6: existence probe — the reference's `SELECT 1 ... LIMIT 1` upsert
-    * predicate (player_ranking…py:77-88). */
-  def exists(df: DataFrame): Boolean = !df.limit(1).isEmpty
-
-  /** S7: debug artifact sink — replaces the reference's stray
-    * `to_excel('all_new_df.xlsx')` (risk_ctrl_rtp_1d.py:160) with a
-    * header'd CSV dump. */
-  def debugCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
   /** Read a report table back (empty-safe: a table that was never written
     * yet reads as an empty DataFrame with the given schema). */

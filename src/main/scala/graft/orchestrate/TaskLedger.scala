@@ -51,15 +51,19 @@ object TaskLedger {
         max_by(col("freq_type"), col("lt_time")).as("freq_type"),
         max_by(col("level"), col("lt_time")).as("level"))
 
-  /** S8: union scan of both boards with a rerun tag (ExecUtils.py:11-31). */
+  /** S8: union scan of both boards with a rerun tag (ExecUtils.py:11-31).
+    *
+    * The result is unordered. O1's priority order (level, gte_time —
+    * ScasTransSummaryTask.py:14) belongs to whatever iterates the collected
+    * slices: a global sort here would cost a range-sampling job and a
+    * shuffle per scan, and `gateWithBypass`, its consumer, passes the rows
+    * through a union that does not keep the order anyway. */
   def scanUndone(taskBoard: DataFrame, rerunBoard: DataFrame, reportClass: String): DataFrame =
     taskBoard.filter(col("done") === 0 && col("report_class") === reportClass)
       .withColumn("is_rerun", lit(0))
       .unionByName(
         rerunBoard.filter(col("done") === 0 && col("report_class") === reportClass)
           .withColumn("is_rerun", lit(1)))
-      // O1: priority ordering (ScasTransSummaryTask.py:14).
-      .orderBy(col("level"), col("gte_time"))
 
   /** Producer: extend each watermark to `now`, ceiled per frequency
     * (GetNewTaskList.py:34-71: gte := last lt; lt := ceil(now) for 1H/1D/1M,

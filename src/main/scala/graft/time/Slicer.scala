@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Slicer {
 
-  val Freqs = Seq("5min", "1H", "1D", "1M")
-
   /** Step of one frequency unit as a day-time interval column (F4). */
   private def unitInterval(freq: String): Column = freq match {
     case "5min" => expr("INTERVAL 5 MINUTES")
@@ -66,41 +64,36 @@ object Slicer {
     * 1M: month-ends within `[gte, lt - 1 day]` define the slices
     * (TaskUtils.py:76-86): slice = `[month_start(e), e + 1 day)`.
     *
-    * Input columns are preserved; gte_time/lt_time are replaced by the
-    * per-slice bounds. Rows whose range is empty produce no slices.
+    * One `explode` over a per-row array of slice starts serves every
+    * frequency, so the input plan (typically a watermark aggregate) runs
+    * once. Input columns are preserved; gte_time/lt_time are replaced by the
+    * per-slice bounds. Rows whose range is empty, whose bounds are null or
+    * whose freq_type is unknown produce no slices.
     */
   def explodeSlices(tasks: DataFrame): DataFrame = {
     val cols = tasks.columns.filterNot(Seq("gte_time", "lt_time").contains)
     val gte = col("gte_time").cast("timestamp")
     val lt = col("lt_time").cast("timestamp")
+    val freq = col("freq_type")
+    val oneDay = expr("INTERVAL 1 DAY")
+    // null for 1M and unknown frequencies
+    val step = make_dt_interval(lit(0), lit(0),
+      when(freq === "5min", 5).when(freq === "1H", 60).when(freq === "1D", 1440), lit(0))
+    def monthEnd(m: Column) = add_months(m, 1).cast("timestamp") - oneDay
+    // Month-end dates e in [gte, lt - 1d]: candidate month starts spanned by
+    // the range, filtered — mirrors pd.date_range(gte, lt - 1d, freq='1M').
+    val months = filter(
+      sequence(date_trunc("month", gte), date_trunc("month", lt), expr("INTERVAL 1 MONTH")),
+      m => monthEnd(m) >= gte && monthEnd(m) <= lt - oneDay)
+    // the guards keep `sequence` off empty or inverted ranges, which it rejects
+    val starts = when(freq === "1M" && gte + oneDay <= lt, months)
+      .when(gte + step <= lt, sequence(gte, lt - step, step))
 
-    def fixed(freq: String) =
-      tasks.filter(col("freq_type") === freq)
-        .filter(gte + unitInterval(freq) <= lt)
-        .withColumn("slice_gte",
-          explode(sequence(gte, lt - unitInterval(freq), unitInterval(freq))))
-        .withColumn("slice_lt", col("slice_gte") + unitInterval(freq))
-
-    // Month-end dates e in [gte, lt - 1d]; slice = [month_start(e), e + 1d).
-    // Candidate month-ends spanned by the range, then filtered — mirrors
-    // pd.date_range(gte, lt - 1d, freq='1M').
-    val monthly =
-      tasks.filter(col("freq_type") === "1M")
-        .withColumn("m_start",
-          explode(sequence(
-            date_trunc("month", gte),
-            date_trunc("month", lt),
-            expr("INTERVAL 1 MONTH"))))
-        .withColumn("m_end", add_months(col("m_start"), 1).cast("timestamp") - expr("INTERVAL 1 DAY"))
-        .filter(col("m_end") >= gte && col("m_end") <= lt - expr("INTERVAL 1 DAY"))
-        .withColumn("slice_gte", col("m_start"))
-        .withColumn("slice_lt", add_months(col("m_start"), 1).cast("timestamp"))
-        .drop("m_start", "m_end")
-
-    val exploded = Freqs.filterNot(_ == "1M").map(fixed).reduce(_ unionByName _)
-      .unionByName(monthly)
-
-    exploded
+    tasks
+      .withColumn("slice_gte", explode(starts))
+      .withColumn("slice_lt",
+        when(freq === "1M", add_months(col("slice_gte"), 1).cast("timestamp"))
+          .otherwise(col("slice_gte") + step))
       .drop("gte_time", "lt_time")
       .withColumnsRenamed(Map("slice_gte" -> "gte_time", "slice_lt" -> "lt_time"))
       .select((cols.map(col) :+ col("gte_time") :+ col("lt_time")): _*)

@@ -105,6 +105,47 @@ class SinksSpec extends AnyFunSuite {
     assert(p2.filter(col("player") === "a").head.getAs[Double]("amount") === 3.0)
   }
 
+  test("upsertSlices launches at most 4 jobs, stays idempotent, and lands a " +
+      "duplicated key row as given") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_jobs").toString + "/t"
+    Sinks.overwriteSlices(Seq((20240101, "a", 1.0), (20240102, "a", 3.0), (20240102, "b", 4.0))
+      .toDF("summary_date", "player", "amount"), base, Seq("summary_date"))
+    def upsert(rows: (Int, String, Double)*): Unit = Sinks.upsertSlices(
+      rows.toDF("summary_date", "player", "amount"), base,
+      Seq("summary_date"), Seq("summary_date", "player"))
+    def table(): Seq[(Int, String, Double)] = spark.read.parquet(base)
+      .select("summary_date", "player", "amount").as[(Int, String, Double)]
+      .collect().toSeq.sortBy(_.toString)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      upsert((20240102, "b", 40.0), (20240102, "c", 7.0))
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 4, s"one upsert launched ${jobs.get} jobs")
+    val once = table()
+    assert(once === Seq((20240101, "a", 1.0), (20240102, "a", 3.0),
+      (20240102, "b", 40.0), (20240102, "c", 7.0)))
+
+    // the merge reads the partition it overwrites, with no second pin:
+    // re-running the identical batch must leave the table row-identical
+    upsert((20240102, "b", 40.0), (20240102, "c", 7.0))
+    assert(table() === once, "re-running an upsert changed the table")
+
+    // the broadcast key set keeps duplicates (no distinct): a left-anti join
+    // neither drops nor multiplies survivors, and the batch lands as given
+    upsert((20240102, "a", 30.0), (20240102, "a", 30.0))
+    assert(table() === Seq((20240101, "a", 1.0), (20240102, "a", 30.0), (20240102, "a", 30.0),
+      (20240102, "b", 40.0), (20240102, "c", 7.0)))
+  }
+
   test("readOrEmpty yields an empty frame with the requested schema for a missing table") {
     val df = Sinks.readOrEmpty(spark, "/tmp/does_not_exist_graft", graft.etl.Schemas.taskBoard)
     assert(df.isEmpty)

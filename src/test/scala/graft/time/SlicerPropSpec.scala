@@ -16,32 +16,52 @@ class SlicerPropSpec extends AnyFunSuite {
   private val base = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
 
   test("property: fixed-freq slices tile the aligned range exactly") {
-    val cases = for {
+    // months and odd rows (unknown freq, null bound, empty or inverted range)
+    // ride in the same frame: one expression slices every frequency
+    def ts(t: java.time.LocalDateTime) = java.sql.Timestamp.valueOf(t)
+    // (case, freq, gte, lt, expected slice count, expected covered span)
+    val fixed = for {
       freq <- Seq("5min", "1H", "1D")
       startUnits <- Seq(0L, 3L, 17L)
       n <- Seq(1L, 7L, 48L)
     } yield {
       val unitMin = freq match { case "5min" => 5L; case "1H" => 60L; case "1D" => 1440L }
-      val gte = base.plusMinutes(startUnits * unitMin)
-      val lt = gte.plusMinutes(n * unitMin)
-      (s"$freq/$startUnits/$n", freq, java.sql.Timestamp.valueOf(gte), java.sql.Timestamp.valueOf(lt), n)
+      val gte = ts(base.plusMinutes(startUnits * unitMin))
+      val lt = ts(base.plusMinutes((startUnits + n) * unitMin))
+      (s"$freq/$startUnits/$n", freq, gte, lt, n, (gte, lt))
     }
-    val tasks = cases.map { case (id, f, g, l, _) => (id, f, g, l) }
+    val jan1 = ts(base)
+    val mar1 = ts(base.plusMonths(2))
+    val noLt = null.asInstanceOf[java.sql.Timestamp]
+    val odd = Seq(
+      ("1M/aligned", "1M", ts(base.minusMonths(2)), ts(base.plusMonths(3)), 5L,
+        (ts(base.minusMonths(2)), ts(base.plusMonths(3)))),
+      // misaligned: slices snap to whole months whose end lies in [gte, lt - 1d]
+      ("1M/misaligned", "1M", ts(base.plusDays(14)), ts(base.plusMonths(2).plusDays(9)), 2L,
+        (jan1, mar1)),
+      ("unknown-freq", "7min", jan1, mar1, 0L, null),
+      ("null-lt/5min", "5min", jan1, noLt, 0L, null),
+      ("null-lt/1M", "1M", jan1, noLt, 0L, null),
+      ("empty/1H", "1H", mar1, mar1, 0L, null),
+      ("empty/1M", "1M", mar1, mar1, 0L, null),
+      ("inverted/1M", "1M", mar1, jan1, 0L, null))
+    val cases = fixed ++ odd
+    val tasks = cases.map { case (id, f, g, l, _, _) => (id, f, g, l) }
       .toDF("case_id", "freq_type", "gte_time", "lt_time")
     val sliced = Slicer.explodeSlices(tasks)
 
     // count per case == n
     val counts = sliced.groupBy("case_id").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    cases.foreach { case (id, _, _, _, n) => assert(counts(id) === n, s"case $id") }
+    cases.foreach { case (id, _, _, _, n, _) => assert(counts.getOrElse(id, 0L) === n, s"case $id") }
 
-    // tiling: min gte == range gte, max lt == range lt, sum of widths == span
+    // tiling: min gte == span start, max lt == span end, sum of widths == span
     val agg = sliced
       .withColumn("width", unix_timestamp(col("lt_time")) - unix_timestamp(col("gte_time")))
       .groupBy("case_id")
       .agg(min("gte_time").as("mn"), max("lt_time").as("mx"), sum("width").as("w"))
       .collect().map(r => r.getString(0) -> r).toMap
-    cases.foreach { case (id, _, g, l, _) =>
+    cases.filter(_._5 > 0).foreach { case (id, _, _, _, _, (g, l)) =>
       val r = agg(id)
       assert(r.getAs[java.sql.Timestamp]("mn") === g, s"case $id min")
       assert(r.getAs[java.sql.Timestamp]("mx") === l, s"case $id max")
