@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - the registration join is on player_name ONLY
   *    (new_register_summary_1d.py:113-114) even though platform/site_code are
   *    available — a cross-platform name collision would leak rows; the
-  *    engine reproduces that and `strictJoin=true` offers the tightened key
+  *    engine reproduces that for parity
   *  - the reference reads SUM(wl_amount) from player_summary_5min although
   *    the 5min writer emits w_amount (SURVEY §1.3) — the physical DB is the
   *    schema authority there; the engine standardizes on w_amount.
@@ -25,8 +25,7 @@ object NewRegisterSummary {
 
   val grain = Seq("platform", "site_code", "game_code", "country")
 
-  def oneDay(playerSummary5min: DataFrame, players: DataFrame, slice: TaskSlice,
-      strictJoin: Boolean = false): DataFrame = {
+  def oneDay(playerSummary5min: DataFrame, players: DataFrame, slice: TaskSlice): DataFrame = {
     val gteTs = slice.gte_time.toLocalDateTime
     val gte = gteTs.toString.replace('T', ' ')
     val lt = slice.lt_time.toLocalDateTime.toString.replace('T', ' ')
@@ -36,7 +35,7 @@ object NewRegisterSummary {
     val newReg = players
       .filter(inWindow(col("reg_time"), gte, lt))
       .filter(col("type") === "NORMAL")
-      .select("player_name", "platform", "site_code")
+      .select("player_name")
 
     // The day's per-player sums from the 5min tier (the reference pins
     // platform/site_code from the task row; ALL wildcards cover the rest).
@@ -55,8 +54,7 @@ object NewRegisterSummary {
         sum(col("profit_amount")).as("profit_amount"),
         sum(col("refund_amount")).as("refund_amount"))
 
-    val joinKeys = if (strictJoin) Seq("player_name", "platform", "site_code") else Seq("player_name")
-    val regData = daySums.join(broadcast(newReg.select(joinKeys.map(col): _*)), joinKeys, "left_semi")
+    val regData = daySums.join(broadcast(newReg), Seq("player_name"), "left_semi")
 
     // A10: sums + member count in ONE aggregation (the reference runs
     // separate .sum() and .count() groupbys and merges them back).

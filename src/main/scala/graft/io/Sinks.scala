@@ -198,39 +198,4 @@ object Sinks {
     try spark.read.parquet(path)
     catch { case _: org.apache.spark.sql.AnalysisException => spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema) }
-
-  // -------------------------------------------------------------------------
-  // JDBC — the reference's actual sink substrate (S3/S4 write report rows
-  // back to MariaDB: trans_summary_5min.py:49 `to_sql(if_exists='append')`
-  // after the slice DELETE at :104-128). NOT exercisable here (no database,
-  // no driver jar — zero egress): compile-checked interface bindings,
-  // mirrored on [[Sources.jdbcTable]]; the parquet paths above are the
-  // tested equivalents (overwriteSlices IS delete-before-insert).
-  // -------------------------------------------------------------------------
-
-  /** S3 over JDBC: plain append of the report rows. */
-  def jdbcAppend(df: DataFrame, url: String, table: String,
-      props: java.util.Properties = new java.util.Properties): Unit =
-    df.write.mode(SaveMode.Append).jdbc(url, table, props)
-
-  /** S4 over JDBC: the reference's delete-before-insert made transact-ish —
-    * one server-side DELETE of the slice window (driver-side statement, the
-    * same scope as the reference's), then a partitioned append. Idempotent
-    * per slice like `overwriteSlices`; not atomic across the two statements
-    * (neither is the reference — it relies on slice-level rerun). */
-  def jdbcOverwriteSlice(df: DataFrame, url: String, table: String,
-      timeCol: String, gte: java.sql.Timestamp, lt: java.sql.Timestamp,
-      props: java.util.Properties = new java.util.Properties): Unit = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      val st = conn.prepareStatement(
-        s"DELETE FROM $table WHERE $timeCol >= ? AND $timeCol < ?")
-      try {
-        st.setTimestamp(1, gte)
-        st.setTimestamp(2, lt)
-        st.executeUpdate()
-      } finally st.close()
-    } finally conn.close()
-    jdbcAppend(df, url, table, props)
-  }
 }

@@ -65,39 +65,4 @@ object Sources {
     val bad = raw.filter(col(CorruptCol).isNotNull).select(col(CorruptCol).as("raw"))
     (good, bad)
   }
-
-  // -------------------------------------------------------------------------
-  // JDBC — the reference's ACTUAL source substrate (S1/S2 read a MariaDB
-  // table per slice: task-executor/trans_summary/trans_summary_5min.py:67-93,
-  // `pd.read_sql` over a half-open time window). The Spark-native binding is
-  // `spark.read.jdbc`. NOT exercisable in this environment — there is no
-  // database and no resolvable driver jar (zero egress) — so these are
-  // compile-checked interface bindings; every tested path reads the parquet
-  // fixtures instead. They exist so a deployment against the reference's
-  // database swaps the source without touching any ETL logic.
-  // -------------------------------------------------------------------------
-
-  /** Whole-table JDBC read, PARTITIONED: `numPartitions` executor-side
-    * connections each scan one `partitionCol` stride — the distributed
-    * replacement for the reference's single pandas connection. The
-    * partition column should be indexed (the reference tables' `trade_time`)
-    * or each stride becomes a server-side full scan. */
-  def jdbcTable(spark: SparkSession, url: String, table: String,
-      partitionCol: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int, props: java.util.Properties = new java.util.Properties)
-      : DataFrame =
-    spark.read.option("fetchsize", "10000")
-      .jdbc(url, table, partitionCol, lowerBound, upperBound, numPartitions, props)
-
-  /** One report slice as a pushed-down window query (the reference's
-    * SELECT ... WHERE time >= gte AND time < lt, P2): the predicate ships
-    * INSIDE the dbtable subquery so the database's index does the pruning
-    * and only the slice's rows cross the wire. Single-partition by design —
-    * a 5-minute slice is small; use [[jdbcTable]] for backfills. */
-  def jdbcWindow(spark: SparkSession, url: String, table: String,
-      timeCol: String, gte: java.sql.Timestamp, lt: java.sql.Timestamp,
-      props: java.util.Properties = new java.util.Properties): DataFrame =
-    spark.read.jdbc(url,
-      s"(SELECT * FROM $table WHERE $timeCol >= '$gte' AND $timeCol < '$lt') AS slice",
-      props)
 }

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 /** Build-once staging for derived local artifacts (stream input drops, ANN
   * index builds) keyed by source CONTENT and published race-free.
   *
-  * The cache key hashes each source file's length plus its first and last
-  * MiB — not its mtime, so a fixture regenerated within filesystem mtime
-  * resolution can never serve a stale artifact. Publication is a single
+  * The cache key hashes each source file's name, length and full content —
+  * not its mtime, so a fixture regenerated within filesystem mtime
+  * resolution can never serve a stale artifact, and neither can a
+  * same-length rewrite anywhere inside a file. Publication is a single
   * atomic rename of a privately-built temp dir (the `_staged` marker is
   * created BEFORE the rename, inside the temp dir), so a concurrent run
   * either sees the complete published artifact or none at all; the loser of
@@ -28,20 +29,15 @@ object Staging {
   private def contentKey(dir: String, srcFiles: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(dir.getBytes("UTF-8"))
+    val buf = new Array[Byte](1 << 20)
     def hashFile(p: Path): Unit = {
       md.update(p.getFileName.toString.getBytes("UTF-8"))
-      val len = Files.size(p)
-      md.update(java.nio.ByteBuffer.allocate(8).putLong(len).array())
-      val ch = java.nio.channels.FileChannel.open(p)
+      md.update(java.nio.ByteBuffer.allocate(8).putLong(Files.size(p)).array())
+      val in = Files.newInputStream(p)
       try {
-        def hashAt(off: Long, n: Int): Unit = {
-          val bb = java.nio.ByteBuffer.allocate(n)
-          ch.read(bb, off); bb.flip(); md.update(bb)
-        }
-        val mib = 1L << 20
-        hashAt(0L, math.min(len, mib).toInt)
-        if (len > mib) hashAt(math.max(len - mib, mib), mib.toInt)
-      } finally ch.close()
+        var n = in.read(buf)
+        while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
+      } finally in.close()
     }
     srcFiles.foreach { f =>
       val p = Paths.get(dir, f)

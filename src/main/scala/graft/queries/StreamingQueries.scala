@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.streaming.StreamingSummary
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -15,30 +16,49 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQueries {
 
-  /** Run `body` (a streaming query start+drain) with shuffle partitions sized
-    * to the STATE, not the CPU count: every stateful operator materializes
-    * one state store per shuffle partition per micro-batch, so a small-state
-    * stream at 32 partitions pays 32x store open/commit overhead for nothing.
-    * On a real cluster this is sized up with state volume; the session value
-    * is restored afterwards either way. */
-  private def withStateSizedShuffle[T](spark: SparkSession,
-      stagedDirs: Seq[String] = Nil, finalNoDataBatch: Boolean = true,
-      stateWeight: Int = 1)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val storeKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    val prevStore = spark.conf.getOption(storeKey)
-    // Size the partition count WITH the state volume (proxied by staged
-    // input bytes: ~1 state-store partition per MiB), floored at 8 — below
-    // that per-store open/commit overhead dominates a small stream — and
-    // capped at the session's cores. Measured at sf1: the interval join is
-    // 26.8 s at 8 partitions, 16.2 s at 32 — RocksDB commit work
+  /** Drain `frame` into a fresh memory sink with `Trigger.AvailableNow`,
+    * require it to finish within 300 s, and return the sink table. Every
+    * `s*` stream goes through here; the state-store settings below hold for
+    * the drain and the session values are restored afterwards.
+    *
+    * Two settings come from the frame's analyzed plan:
+    *  - The trailing no-data micro-batch advances the watermark one last
+    *    time. It is kept only in append mode when the plan holds a streaming
+    *    `Aggregate` (windowed or session): that is the one operator here that
+    *    emits on a watermark advance. Everywhere else it is turned off: it
+    *    would open and commit a state store on every partition for no
+    *    output. A complete-mode sink re-emits the whole result every batch,
+    *    every `flatMapGroupsWithState` here uses `NoTimeout`, and the only
+    *    stream-stream join is inner and emits eagerly; the eviction that
+    *    `dropDuplicatesWithinWatermark` or a join would do in that batch is
+    *    irrelevant to a drain that terminates.
+    *  - The state weight is 8 when the plan joins two streaming sides and 1
+    *    otherwise (see the partition sizing below). */
+  private[graft] def drain(spark: SparkSession, tag: String, mode: String,
+      stagedDirs: Seq[String])(frame: Dataset[_]): DataFrame = {
+    val plan = frame.queryExecution.analyzed
+    val trailingBatch = mode == "append" && plan.exists {
+      case a: Aggregate => a.isStreaming
+      case _ => false
+    }
+    val streamJoin = plan.exists {
+      case j: Join => j.left.isStreaming && j.right.isStreaming
+      case _ => false
+    }
+    // Shuffle partitions are sized to the STATE, not the CPU count: every
+    // stateful operator materializes one state store per shuffle partition
+    // per micro-batch, so a small-state stream at 32 partitions pays 32x
+    // store open/commit overhead for nothing. The state volume is proxied by
+    // staged input bytes (~1 state-store partition per MiB), floored at 8 —
+    // below that per-store open/commit overhead dominates a small stream —
+    // and capped at the session's cores. Measured at sf1: the interval join
+    // is 26.8 s at 8 partitions, 16.2 s at 32 — RocksDB commit work
     // parallelizes across stores and per-store compactions shrink, so
     // under-partitioning state is a real regression at scale, exactly like
-    // under-partitioning a shuffle. SPARK_GRAFT_STREAM_PARTS overrides.
+    // under-partitioning a shuffle.
     //
-    // `stateWeight` scales the MiB proxy for operators whose state WORK per
-    // input byte is a multiple of an aggregation's: a stream-stream join
+    // The state weight scales the MiB proxy for a stream-stream join, whose
+    // state WORK per input byte is a multiple of an aggregation's: it
     // buffers BOTH full inputs (4 stores per partition) and updates state on
     // every row, so its update task-time per staged MiB is ~an order above
     // a windowed sum's. Measured on the interval join at sf0.1 (2.2 MiB
@@ -48,54 +68,34 @@ object StreamingQueries {
     // 15.2 s at 16) keep weight 1. At production state volumes the MiB
     // term saturates the core cap either way, so the weight only shapes
     // the small end.
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      val bytes = stagedDirs.map { d =>
-        val f = new java.io.File(d)
-        if (f.isDirectory) f.listFiles().map(_.length).sum else f.length
-      }.sum
-      val cores = spark.sparkContext.defaultParallelism
-      math.max(8, math.min(cores, (stateWeight * (bytes >> 20)).toInt))
-    }
-    spark.conf.set(key, parts.toString)
-    // RocksDB is the default state store: the in-memory HDFS-backed provider
-    // keeps every version of every store on heap, which at sf1 forced a
-    // 48 GiB driver. RocksDB holds state off-heap/on-disk and is the only
-    // provider whose footprint survives a 100 TB key space.
-    // StreamRecoverySpec proves output parity. SPARK_GRAFT_STATE_STORE=hdfs
-    // restores the legacy provider for A/B runs.
-    val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb") match {
-      case "hdfs" => "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      case "rocksdb" => "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other // full class name passthrough
-    }
-    spark.conf.set(storeKey, provider)
-    // Changelog checkpointing: commit the per-batch CHANGELOG instead of a
-    // full RocksDB snapshot every micro-batch. Without it the interval-join
-    // state (two stream sides' buffers) re-snapshots wholesale per trigger —
-    // measured 2x wall on s4 at sf1. Snapshots still happen, just in the
-    // background at an interval rather than on the commit path.
-    val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = spark.conf.getOption(changelogKey)
-    spark.conf.set(changelogKey, "true")
-    // Row-count tracking does a get-before-put on EVERY state update to keep
-    // numRowsTotal exact; stream-stream joins update state on every input
-    // row, so the metric costs more than the join. The count becomes an
-    // estimate in the progress metrics — nothing correctness-bearing.
-    val trackKey = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val prevTrack = spark.conf.getOption(trackKey)
-    spark.conf.set(trackKey, "false")
-    // The trailing no-data micro-batch advances the watermark one last time:
-    // append-mode AGGREGATIONS need it to emit their final windows, but a
-    // complete-mode sink just re-truncates and rewrites the identical table,
-    // and an eagerly-emitting inner stream-stream join emits nothing — those
-    // callers pass finalNoDataBatch = false and skip one full no-op batch
-    // (state-store open/commit across every partition) per drain. Output is
-    // bitwise identical by construction for those shapes; eviction the
-    // skipped batch would have done is irrelevant to a drain-and-terminate
-    // run. The conf is restored either way.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.getOption(noDataKey)
-    if (!finalNoDataBatch) spark.conf.set(noDataKey, "false")
+    val stateWeight = if (streamJoin) 8 else 1
+    val bytes = stagedDirs.map { d =>
+      val f = new java.io.File(d)
+      if (f.isDirectory) f.listFiles().map(_.length).sum else f.length
+    }.sum
+    val parts = math.max(8, math.min(spark.sparkContext.defaultParallelism,
+      (stateWeight * (bytes >> 20)).toInt))
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      // RocksDB: the in-memory HDFS-backed provider keeps every version of
+      // every store on heap, which at sf1 forced a 48 GiB driver. RocksDB
+      // holds state off-heap/on-disk and is the only provider whose
+      // footprint survives a 100 TB key space. StreamRecoverySpec proves
+      // output parity with the HDFS-backed provider.
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      // Changelog checkpointing: commit the per-batch CHANGELOG instead of a
+      // full RocksDB snapshot every micro-batch. Without it the interval-join
+      // state (two stream sides' buffers) re-snapshots wholesale per trigger
+      // — measured 2x wall on s4 at sf1. Snapshots still happen, just in the
+      // background at an interval rather than on the commit path.
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      // Row-count tracking does a get-before-put on EVERY state update to
+      // keep numRowsTotal exact; stream-stream joins update state on every
+      // input row, so the metric costs more than the join. The count becomes
+      // an estimate in the progress metrics — nothing correctness-bearing.
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> trailingBatch.toString)
     // NOTE: leave spark.sql.streaming.stateStore.maintenanceInterval at its
     // 60 s default. Deferring it looks tempting for drain-and-terminate
     // AvailableNow runs (no snapshot work mid-query), but maintenance is
@@ -105,14 +105,22 @@ object StreamingQueries {
     // measured at sf3, s4 went from ~35 s to a 300 s timeout. The snapshot
     // side is already cheap here because changelog checkpointing defers
     // full snapshots past minDeltasForSnapshot batches.
-    try body finally {
-      spark.conf.set(key, prev)
-      prevStore.fold(spark.conf.unset(storeKey))(spark.conf.set(storeKey, _))
-      prevChangelog.fold(spark.conf.unset(changelogKey))(spark.conf.set(changelogKey, _))
-      prevTrack.fold(spark.conf.unset(trackKey))(spark.conf.set(trackKey, _))
-      prevNoData.fold(spark.conf.unset(noDataKey))(spark.conf.set(noDataKey, _))
-    }
+    val name = freshMemorySink(spark, s"graft_${tag}_")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = frame.writeStream.outputMode(mode).format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      require(q.awaitTermination(300000),
+        s"$tag stream timed out before AvailableNow drained — memory table would be partial")
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    spark.table(name)
   }
+
+  /** A file-source stream over a staged parquet directory, with the
+    * directory's own schema. */
+  private def fileStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
 
   /** A fresh unique memory-sink table name for `prefix`, dropping any STALE
     * sink tables a previous invocation of the same query registered. Memory
@@ -178,17 +186,8 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(out)
     }
 
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s1_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = StreamingSummary.transFiveMinStream(stream)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s1 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    val out = spark.table(name).drop("start_time")
+    val out = drain(spark, "s1", "complete", Seq(inDir))(
+      StreamingSummary.transFiveMinStream(fileStream(spark, inDir))).drop("start_time")
     Seq("trans_in_amount", "trans_out_amount", "trans_out_lost_amount")
       .foldLeft(out)((d, c) => d.withColumn(c, col(c).cast("double")))
   }
@@ -232,18 +231,8 @@ object StreamingQueries {
           (col("event_type") === "purchase").as("isPurchase"), col("value"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-      .as[graft.streaming.StreamingSummary.AttrEvent]
-    val name = freshMemorySink(spark, "graft_s2_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = graft.streaming.StreamingSummary.attributionStream(stream)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s2 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name).select(
+    drain(spark, "s2", "append", Seq(inDir))(StreamingSummary.attributionStream(
+      fileStream(spark, inDir).as[StreamingSummary.AttrEvent])).select(
       col("purchase_id"), col("user_id"),
       timestamp_micros(col("purchase_ts_us")).cast("timestamp_ntz").as("purchase_ts"),
       col("purchase_value"),
@@ -280,20 +269,11 @@ object StreamingQueries {
       vlog.write.mode("append").parquet(out) // the replayed delivery
     }
 
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
     val deduped = StreamingSummary
-      .dedupStream(stream, Seq("event_id"), "trade_time")
+      .dedupStream(fileStream(spark, inDir), Seq("event_id"), "trade_time")
       .drop("event_id")
-    val name = freshMemorySink(spark, "graft_s3_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = StreamingSummary.transFiveMinStream(deduped, watermark = "")
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s3 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    val out = spark.table(name).drop("start_time")
+    val out = drain(spark, "s3", "complete", Seq(inDir))(
+      StreamingSummary.transFiveMinStream(deduped, watermark = "")).drop("start_time")
     Seq("trans_in_amount", "trans_out_amount", "trans_out_lost_amount")
       .foldLeft(out)((d, c) => d.withColumn(c, col(c).cast("double")))
   }
@@ -329,18 +309,8 @@ object StreamingQueries {
     }
     val tDir = stage.resolve("t").toString
     val rDir = stage.resolve("r").toString
-    val tStream = spark.readStream.schema(spark.read.parquet(tDir).schema).parquet(tDir)
-    val rStream = spark.readStream.schema(spark.read.parquet(rDir).schema).parquet(rDir)
-    val name = freshMemorySink(spark, "graft_s4_")
-    withStateSizedShuffle(spark, Seq(tDir, rDir), finalNoDataBatch = false,
-        stateWeight = 8) {
-      val q = StreamingSummary.transNearRoundsStream(tStream, rStream)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s4 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name).select(
+    drain(spark, "s4", "append", Seq(tDir, rDir))(StreamingSummary.transNearRoundsStream(
+      fileStream(spark, tDir), fileStream(spark, rDir))).select(
       col("platform"), col("player_name"), col("trade_type"),
       col("trade_value").cast("double").as("trade_value"),
       col("trade_time").cast("timestamp_ntz").as("trade_time"),
@@ -438,18 +408,8 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(out)
     }
     val table = ExtensionQueries.ensureMinhashIndex(spark, dir)
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val probe = graft.ext.Dedup.dedupAgainstIndex(
-      spark, table, stream, ExtensionQueries.minhashThreshold)
-    val name = freshMemorySink(spark, "graft_s6_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = probe.writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s6 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s6", "append", Seq(inDir))(graft.ext.Dedup.dedupAgainstIndex(
+      spark, table, fileStream(spark, inDir), ExtensionQueries.minhashThreshold))
   }
 
   /** The custom TypedImperativeAggregate under streaming state: complete-mode
@@ -462,19 +422,10 @@ object StreamingQueries {
         .select(col("lang"), col("n_chars").cast("long").as("n_chars"), col("doc_id"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s7_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = stream.groupBy(col("lang"))
-        .agg(graft.functions.AggFunctions.topk_pairs(
-          col("n_chars"), col("doc_id"), 3).as("top"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s7 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s7", "complete", Seq(inDir))(fileStream(spark, inDir)
+      .groupBy(col("lang"))
+      .agg(graft.functions.AggFunctions.topk_pairs(
+        col("n_chars"), col("doc_id"), 3).as("top")))
       .select(col("lang"), explode(col("top")).as("t"))
       .select(col("lang"), col("t.score").as("n_chars"), col("t.item").as("doc_id"))
   }
@@ -489,20 +440,11 @@ object StreamingQueries {
       graft.Tables.documents(spark, dir).select("doc_id", "text")
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s8_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      // same tokenizer as the batch twin (x29): the shared oracle replays
-      // the BPE subword stream, so the streamed chunker must cut it too
-      val q = graft.ext.Corpus.chunkDocs(stream, window = 64, stride = 48,
-          tokens = graft.ext.TextStats.bpeTokens)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s8 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    // same tokenizer as the batch twin (x29): the shared oracle replays
+    // the BPE subword stream, so the streamed chunker must cut it too
+    drain(spark, "s8", "append", Seq(inDir))(graft.ext.Corpus.chunkDocs(
+      fileStream(spark, inDir), window = 64, stride = 48,
+      tokens = graft.ext.TextStats.bpeTokens))
   }
 
   /** Streaming SESSION windows (q19's twin): the same 30-minute-gap
@@ -519,31 +461,21 @@ object StreamingQueries {
         .select(col("user_id"), col("ts"), col("value"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s9_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      // watermarks require TIMESTAMP (ltz); the session math is relative to
-      // the event times themselves, so the ntz->ltz->ntz round trip under
-      // the session's fixed UTC zone is value-preserving (same as s1/s4)
-      val q = stream
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(graft.ops.Cols.money(col("value"))).cast("double").as("value_sum"))
-        .select(
-          col("user_id"),
-          col("session_window.start").cast("timestamp_ntz").as("session_start"),
-          col("session_window.end").cast("timestamp_ntz").as("session_end"),
-          col("n_events"), col("value_sum"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s9 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    // watermarks require TIMESTAMP (ltz); the session math is relative to
+    // the event times themselves, so the ntz->ltz->ntz round trip under
+    // the session's fixed UTC zone is value-preserving (same as s1/s4)
+    drain(spark, "s9", "complete", Seq(inDir))(fileStream(spark, inDir)
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        sum(graft.ops.Cols.money(col("value"))).cast("double").as("value_sum"))
+      .select(
+        col("user_id"),
+        col("session_window.start").cast("timestamp_ntz").as("session_start"),
+        col("session_window.end").cast("timestamp_ntz").as("session_end"),
+        col("n_events"), col("value_sum")))
   }
 
   /** Streaming DSIR admission scoring (x42's twin): incoming documents are
@@ -566,23 +498,14 @@ object StreamingQueries {
     // batch-trained model over the same corpus the oracle replays
     val weights = graft.ext.Corpus.dsirTermWeights(
       graft.Tables.documents(spark, dir), col("lang") === "en")
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s10_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = stream
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), explode(split(trim(col("text")), " ")).as("term"))
-        .join(broadcast(weights), Seq("term"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_terms"), sum("lw").as("w"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s10 stream timed out before AvailableNow drained — memory table would be partial")
-    }
+    val scored = drain(spark, "s10", "complete", Seq(inDir))(fileStream(spark, inDir)
+      .filter(length(trim(col("text"))) > 0)
+      .select(col("doc_id"), explode(split(trim(col("text")), " ")).as("term"))
+      .join(broadcast(weights), Seq("term"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_terms"), sum("lw").as("w")))
     spark.read.parquet(inDir).select("doc_id")
-      .join(spark.table(name), Seq("doc_id"), "left")
+      .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_terms"), lit(0L)).as("n_terms"),
         coalesce(col("w").cast("double"), lit(0.0)).as("log_weight"),
@@ -607,22 +530,12 @@ object StreamingQueries {
     val rates = graft.ext.Corpus.frequencyCapRates(
       graft.Tables.documents(spark, dir).select(col("doc_id"), col("source")),
       col("source"), ExtensionQueries.capShare)
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s11_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = stream
-        .join(broadcast(rates), col("source") === col("stratum"))
-        .withColumn("bucket", graft.functions.HashFunctions.md5_bucket(
-          concat(lit("cap:"), col("doc_id").cast("string")), 10000))
-        .filter(col("bucket") < col("keep_threshold"))
-        .select("doc_id", "source", "bucket")
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s11 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s11", "append", Seq(inDir))(fileStream(spark, inDir)
+      .join(broadcast(rates), col("source") === col("stratum"))
+      .withColumn("bucket", graft.functions.HashFunctions.md5_bucket(
+        concat(lit("cap:"), col("doc_id").cast("string")), 10000))
+      .filter(col("bucket") < col("keep_threshold"))
+      .select("doc_id", "source", "bucket"))
   }
 
   private val s11Sql =
@@ -641,23 +554,13 @@ object StreamingQueries {
       graft.Tables.documents(spark, dir).select("doc_id", "source", "text")
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s12_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = stream
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(graft.ext.TextStats.tokenCount(col("text"))).cast("long").as("n_tokens"),
-          sum(when(length(trim(col("text"))) === 0, 1L).otherwise(0L))
-            .cast("long").as("empty_docs"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s12 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s12", "complete", Seq(inDir))(fileStream(spark, inDir)
+      .groupBy(col("source"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(graft.ext.TextStats.tokenCount(col("text"))).cast("long").as("n_tokens"),
+        sum(when(length(trim(col("text"))) === 0, 1L).otherwise(0L))
+          .cast("long").as("empty_docs")))
   }
 
   private val s12Sql =
@@ -682,29 +585,20 @@ object StreamingQueries {
       Tables.events(spark, dir).select(col("ts"), col("event_type"), col("user_id"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s13_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = stream
-        .withColumn("h", shiftrightunsigned(
-          graft.functions.HashFunctions.md5_lo64(col("user_id").cast("string")), 1))
-        // UTC session: NTZ -> TIMESTAMP keeps the wall clock; watermarks
-        // only accept TIMESTAMP (same move as StreamingSummary:33)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.functions.AggFunctions.kmv_distinct(col("h"), 64).as("approx_users"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s13 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name).select(
-      date_format(col("window.start"), "yyyyMMdd").cast("int").as("summary_date"),
-      col("event_type"), col("n_events"), col("approx_users"))
+    drain(spark, "s13", "complete", Seq(inDir))(fileStream(spark, inDir)
+      .withColumn("h", shiftrightunsigned(
+        graft.functions.HashFunctions.md5_lo64(col("user_id").cast("string")), 1))
+      // UTC session: NTZ -> TIMESTAMP keeps the wall clock; watermarks
+      // only accept TIMESTAMP (same move as StreamingSummary:33)
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 day"), col("event_type"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        graft.functions.AggFunctions.kmv_distinct(col("h"), 64).as("approx_users")))
+      .select(
+        date_format(col("window.start"), "yyyyMMdd").cast("int").as("summary_date"),
+        col("event_type"), col("n_events"), col("approx_users"))
   }
 
   private val s13Sql =
@@ -749,23 +643,13 @@ object StreamingQueries {
       bucketCol = least(expr("token_count div 10"), lit(19)).cast("int"),
       targetPred = col("lang") === "en")
       .select("bucket", "threshold")
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s14_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = stream
-        .withColumn("bucket", least(expr("token_count div 10"), lit(19)).cast("int"))
-        .join(broadcast(rates), Seq("bucket"))
-        .withColumn("mb", graft.functions.HashFunctions.md5_bucket(
-          concat(lit("lm:"), col("doc_id").cast("string")), 10000))
-        .filter(col("mb") < col("threshold"))
-        .select("doc_id", "lang", "bucket", "mb")
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s14 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s14", "append", Seq(inDir))(fileStream(spark, inDir)
+      .withColumn("bucket", least(expr("token_count div 10"), lit(19)).cast("int"))
+      .join(broadcast(rates), Seq("bucket"))
+      .withColumn("mb", graft.functions.HashFunctions.md5_bucket(
+        concat(lit("lm:"), col("doc_id").cast("string")), 10000))
+      .filter(col("mb") < col("threshold"))
+      .select("doc_id", "lang", "bucket", "mb"))
   }
 
   private val s14Sql =
@@ -811,24 +695,14 @@ object StreamingQueries {
     val inDir = stageInput("s15drift", dir, Seq("embeddings.parquet")) { out =>
       Tables.embeddings(spark, dir).write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s15_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = stream
-        .select(col("label").as("grp"), (col("vec_id") % 2 === 1).cast("int").as("in_b"),
-          posexplode(col("embedding")).as(Seq("j", "x")))
-        .groupBy("grp", "in_b", "j")
-        .agg(
-          sum(round(col("x").cast("double"), 6)
-            .cast(org.apache.spark.sql.types.DecimalType(27, 6))).as("xsum"),
-          count(lit(1)).as("n"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s15 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    val dims = spark.table(name)
+    val dims = drain(spark, "s15", "complete", Seq(inDir))(fileStream(spark, inDir)
+      .select(col("label").as("grp"), (col("vec_id") % 2 === 1).cast("int").as("in_b"),
+        posexplode(col("embedding")).as(Seq("j", "x")))
+      .groupBy("grp", "in_b", "j")
+      .agg(
+        sum(round(col("x").cast("double"), 6)
+          .cast(org.apache.spark.sql.types.DecimalType(27, 6))).as("xsum"),
+        count(lit(1)).as("n")))
       .withColumn("mv", col("xsum").cast("double") / col("n").cast("double"))
     val means = dims.groupBy("grp", "in_b")
       .agg(array_sort(collect_list(struct(col("j"), col("mv")))).as("jm"))
@@ -862,18 +736,8 @@ object StreamingQueries {
         col("event_type").as("token"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-      .as[graft.streaming.StreamingSummary.SeqEvent]
-    val name = freshMemorySink(spark, "graft_s16_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = graft.streaming.StreamingSummary.nextTokenStream(stream)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s16 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s16", "append", Seq(inDir))(StreamingSummary.nextTokenStream(
+      fileStream(spark, inDir).as[StreamingSummary.SeqEvent]))
   }
 
   /** s17 — streaming funnel (q43's twin): per-user funnel progress as one
@@ -892,18 +756,9 @@ object StreamingQueries {
             .when(col("event_type") === "click", 2).otherwise(3).as("step"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-      .as[graft.streaming.StreamingSummary.FunnelEvent]
-    val name = freshMemorySink(spark, "graft_s17_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = graft.streaming.StreamingSummary
-        .funnelStream(stream, horizonMicros = 24L * 3600 * 1000000)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s17 stream timed out before AvailableNow drained — memory table would be partial")
-    }
+    val advances = drain(spark, "s17", "append", Seq(inDir))(StreamingSummary.funnelStream(
+      fileStream(spark, inDir).as[StreamingSummary.FunnelEvent],
+      horizonMicros = 24L * 3600 * 1000000))
     // left-join the advance-log counts onto the literal 3-row step table:
     // the batch oracle (q43) always emits all three step rows (a count over
     // an empty frame is users = 0), so a small SF where no user reaches a
@@ -912,7 +767,7 @@ object StreamingQueries {
     val stepTable = Seq((1, "view"), (2, "click"), (3, "purchase"))
       .toDF("step", "step_name")
     val counts = stepTable
-      .join(spark.table(name).groupBy("step").agg(count(lit(1)).as("users")),
+      .join(advances.groupBy("step").agg(count(lit(1)).as("users")),
         Seq("step"), "left")
       .select(col("step"), col("step_name"),
         coalesce(col("users"), lit(0L)).as("users"))
@@ -936,17 +791,7 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(out)
     }
     val plan = FixtureQueries.madPlan(spark.read.parquet(inDir))
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s18_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = s18StreamFrame(stream, plan)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s18 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s18", "complete", Seq(inDir))(s18StreamFrame(fileStream(spark, inDir), plan))
   }
 
   /** The s18 pre-start stream frame, factored out so PlanAuditSpec can pin
@@ -980,20 +825,11 @@ object StreamingQueries {
           .as("bucket"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s19_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = s19CounterFrame(stream)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s19 stream timed out before AvailableNow drained — memory table would be partial")
-    }
     // counters are |sources| * O(log max_len) rows; the checkpoint cuts the
     // shared memory-table lineage so the three derived aggregates can join
     // back without attribute conflicts (same shape as Corpus.psiBySource)
-    val sb = spark.table(name).localCheckpoint()
+    val sb = drain(spark, "s19", "complete", Seq(inDir))(
+      s19CounterFrame(fileStream(spark, inDir))).localCheckpoint()
     val s = sb.groupBy("source").agg(sum(col("c_sb")).as("c_s"))
     val bb = sb.groupBy("bucket").agg(sum(col("c_sb")).as("c_b"))
     val t = sb.agg(sum(col("c_sb")).as("c"))
@@ -1031,19 +867,9 @@ object StreamingQueries {
       graft.Tables.documents(spark, dir).select("doc_id", "text")
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s20_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val toks = stream.filter(trim(col("text")) =!= "")
-        .select(explode(split(trim(col("text")), " ")).as("item"))
-      val q = s20CounterFrame(toks)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s20 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    val toks = fileStream(spark, inDir).filter(trim(col("text")) =!= "")
+      .select(explode(split(trim(col("text")), " ")).as("item"))
+    drain(spark, "s20", "complete", Seq(inDir))(s20CounterFrame(toks))
   }
 
   /** The s20 pre-start counter frame (PlanAuditSpec pins the shape): the
@@ -1082,17 +908,7 @@ object StreamingQueries {
         .select("c_nationkey", "c_mktsegment", "c_acctbal")
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s21_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = s21CensusFrame(stream)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s21 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s21", "complete", Seq(inDir))(s21CensusFrame(fileStream(spark, inDir)))
   }
 
   /** The s21 pre-start census frame (PlanAuditSpec pins the shape): the only
@@ -1135,17 +951,8 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(out)
     }
     val ref = spark.read.parquet(refDir).withColumn("hit", lit(1))
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s22_")
-    withStateSizedShuffle(spark, Seq(inDir, refDir), finalNoDataBatch = false) {
-      val q = s22NoveltyFrame(stream, ref)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s22 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s22", "complete", Seq(inDir, refDir))(
+      s22NoveltyFrame(fileStream(spark, inDir), ref))
   }
 
   /** The s22 pre-start meter frame (PlanAuditSpec pins the shape): ONE
@@ -1199,17 +1006,8 @@ object StreamingQueries {
     val pairs = spark.read.parquet(modelDir)
     val ctxTotals = pairs.groupBy("ctx").agg(sum(col("cp")).as("cc"))
     val vocab = pairs.select("nxt").distinct().count()
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s23_")
-    withStateSizedShuffle(spark, Seq(inDir, modelDir), finalNoDataBatch = false) {
-      val q = s23XentFrame(stream, pairs, ctxTotals, vocab)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s23 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s23", "complete", Seq(inDir, modelDir))(
+      s23XentFrame(fileStream(spark, inDir), pairs, ctxTotals, vocab))
   }
 
   /** The s23 pre-start scoring frame (PlanAuditSpec pins the shape): two
@@ -1289,17 +1087,7 @@ object StreamingQueries {
       graft.Tables.events(spark, dir).select("event_type", "value")
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s24_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = s24BenfordFrame(stream)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s24 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s24", "complete", Seq(inDir))(s24BenfordFrame(fileStream(spark, inDir)))
   }
 
   /** The s24 pre-start census frame (PlanAuditSpec pins the shape): one
@@ -1348,17 +1136,8 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(out)
     }
     val thresholds = spark.read.parquet(thrDir)
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s25_")
-    withStateSizedShuffle(spark, Seq(inDir, thrDir), finalNoDataBatch = false) {
-      val q = s25WinsorFrame(stream, thresholds)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s25 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s25", "complete", Seq(inDir, thrDir))(
+      s25WinsorFrame(fileStream(spark, inDir), thresholds))
   }
 
   /** The s25 pre-start enforcement frame (PlanAuditSpec pins the shape):
@@ -1408,17 +1187,8 @@ object StreamingQueries {
     }
     val sentinelTs = spark.read.parquet(inDir)
       .agg(max(col("ts"))).head.getTimestamp(0)
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s26_")
-    withStateSizedShuffle(spark, Seq(inDir)) {
-      val q = s26RollupFrame(stream, sentinelTs)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s26 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s26", "append", Seq(inDir))(
+      s26RollupFrame(fileStream(spark, inDir), sentinelTs))
   }
 
   /** The s26 pre-start frame (PlanAuditSpec pins the two-tier shape): the
@@ -1459,17 +1229,8 @@ object StreamingQueries {
             .cast("long").as("day"))
         .write.mode("overwrite").parquet(out)
     }
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s27_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = s27CounterFrame(stream)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s27 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    graft.ext.Profile.cusumSweep(spark.table(name).localCheckpoint())
+    graft.ext.Profile.cusumSweep(drain(spark, "s27", "complete", Seq(inDir))(
+      s27CounterFrame(fileStream(spark, inDir))).localCheckpoint())
   }
 
   /** The s27 pre-start counter frame (PlanAuditSpec pins it): the only
@@ -1500,17 +1261,7 @@ object StreamingQueries {
       .select(col("user_id").as("s_user"), col("band"),
         col("valid_from"), col("valid_to"))
       .localCheckpoint() // freeze the dimension; the stream probes it per batch
-    val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val name = freshMemorySink(spark, "graft_s28_")
-    withStateSizedShuffle(spark, Seq(inDir), finalNoDataBatch = false) {
-      val q = s28PitFrame(stream, scd)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(300000),
-        "s28 stream timed out before AvailableNow drained — memory table would be partial")
-    }
-    spark.table(name)
+    drain(spark, "s28", "complete", Seq(inDir))(s28PitFrame(fileStream(spark, inDir), scd))
   }
 
   /** The s28 pre-start frame (PlanAuditSpec pins it): ONE stream-static

@@ -341,4 +341,73 @@ class StreamingSpec extends AnyFunSuite {
         col("approx_users") =!= col("batch_users"))
     assert(bad.isEmpty, "streamed sketch diverged from the batch sketch")
   }
+
+  test("drain keeps the trailing no-data batch only for an append-mode aggregation") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val drain = graft.queries.StreamingQueries.drain _
+    val root = java.nio.file.Files.createTempDirectory("graft_drain").toString
+    def at(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
+    def stage(name: String, df: org.apache.spark.sql.DataFrame): String = {
+      df.repartition(1).write.parquet(s"$root/$name"); s"$root/$name"
+    }
+    def stream(dir: String) =
+      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    // input-row counts of every micro-batch, per drain tag
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        batches.add((e.progress.name, e.progress.numInputRows))
+    }
+    def zeroInputBatches(tag: String): Int = {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      batches.toArray.count {
+        case (n: String, rows: Long) => n.startsWith(s"graft_${tag}_") && rows == 0L
+      }
+    }
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val noDataBefore = spark.conf.getOption(noDataKey)
+    spark.streams.addListener(listener)
+    try {
+      // 24 events one minute apart: the watermark (max - 5 min = 10:18)
+      // closes three 5-minute windows, but only in the trailing batch
+      val ev = stage("ev", (0 until 24).map(m => (m.toLong % 3, at(m))).toDF("k", "ts"))
+      val windows = drain(spark, "t_win", "append", Seq(ev))(stream(ev)
+        .withWatermark("ts", "5 minutes")
+        .groupBy(window(col("ts"), "5 minutes"))
+        .agg(count(lit(1)).as("n")))
+        .select(col("window.start").as("w"), col("n"))
+        .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toSet
+      assert(windows === Set((at(0), 5L), (at(5), 5L), (at(10), 5L)))
+      assert(zeroInputBatches("t_win") === 1)
+
+      // complete mode behind a watermarked dedup, whose eviction would
+      // otherwise ask for one more batch (the s3 shape)
+      val twice = stage("twice", (0 until 20).map(m => (m.toLong, m.toLong % 4, at(m)))
+        .flatMap(r => Seq(r, r)).toDF("id", "k", "ts"))
+      val counts = drain(spark, "t_cmp", "complete", Seq(twice))(stream(twice)
+        .withWatermark("ts", "5 minutes")
+        .dropDuplicatesWithinWatermark("id")
+        .groupBy("k").agg(count(lit(1)).as("n")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(counts === Set((0L, 5L), (1L, 5L), (2L, 5L), (3L, 5L)))
+      assert(zeroInputBatches("t_cmp") === 0)
+
+      // inner stream-stream interval join, both sides watermarked
+      val left = stage("l", (0 until 12).map(m => (m.toLong % 4, at(m * 2))).toDF("lk", "lt"))
+      val right = stage("r", (0 until 12).map(m => (m.toLong % 4, at(m * 2 + 1))).toDF("rk", "rt"))
+      def joined(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
+        l.withWatermark("lt", "5 minutes").join(r.withWatermark("rt", "5 minutes"),
+          col("lk") === col("rk") && col("rt").between(
+            col("lt") - expr("INTERVAL 10 MINUTES"), col("lt") + expr("INTERVAL 10 MINUTES")))
+      val got = drain(spark, "t_join", "append", Seq(left, right))(
+        joined(stream(left), stream(right))).count()
+      assert(got > 0)
+      assert(got === joined(spark.read.parquet(left), spark.read.parquet(right)).count())
+      assert(zeroInputBatches("t_join") === 0)
+    } finally spark.streams.removeListener(listener)
+    assert(spark.conf.getOption(noDataKey) === noDataBefore, "drain must restore the session conf")
+  }
 }
