@@ -160,35 +160,6 @@ object RiskCtrl {
     coalesce(nanvl(when(abs(c) === Double.PositiveInfinity, lit(Double.NaN)).otherwise(c),
       lit(0.0)), lit(0.0))
 
-  /** W2 idiomatic alternative: the trailing WMA/sigma for EVERY day in one
-    * pass, as a range-frame window over the day tier — instead of re-running
-    * the two-stage aggregation once per day-slice (A5). `[d-8, d)` in
-    * yyyymmdd ordering uses a row-valued range on a derived day index so the
-    * frame is a true 8-day window even across month boundaries.
-    *
-    * Scale: one shuffle on the player key + an ordered window scan replaces
-    * N daily jobs over overlapping 8-day reads — the batch/backfill path;
-    * the per-slice [[playerMeta]] stays for incremental daily runs. */
-  def playerWmaAllDays(playerSummary1d: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val k = playerKeys.map(col)
-    val day = playerSummary1d
-      .groupBy((col("summary_date") +: k): _*)
-      .agg(sum(col("b_amount")).as("b_day"), sum(col("profit_amount")).as("p_day"))
-      // day index in days-since-epoch so rangeBetween counts real days
-      .withColumn("day_idx", datediff(
-        to_date(col("summary_date").cast("string"), "yyyyMMdd"),
-        lit("1970-01-01").cast("date")))
-    val w = Window.partitionBy(k: _*).orderBy(col("day_idx"))
-      .rangeBetween(-8, -1)
-    day.select(
-      (k :+ col("summary_date") :+
-        (sum(col("b_day")).over(w) / 7.0).as("b_wma") :+
-        (sum(col("p_day")).over(w) / 7.0).as("p_wma") :+
-        stddev_pop(col("b_day")).over(w).as("b_wmasd") :+
-        stddev_pop(col("p_day")).over(w).as("p_wmasd")): _*)
-  }
-
   /** Full player report for one day-slice. */
   def playerOneDay(playerSummary1h: DataFrame, transSummary1h: DataFrame,
       playerSummary1d: DataFrame, transSummary1d: DataFrame, slice: TaskSlice,

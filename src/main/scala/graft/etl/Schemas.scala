@@ -5,66 +5,11 @@ import org.apache.spark.sql.types._
 /** Explicit schemas for the reference's data model (SURVEY §1.4, FIXTURES §A).
   *
   * The reference has no schema registry — its schemas live in an external
-  * MariaDB's DDL. The engine makes them explicit: every source and report
-  * table gets a StructType, and orchestration rows get a case class so the
-  * task ledger is a typed Dataset.
-  *
-  * Money stays DoubleType to match the reference's pandas float64 semantics
-  * (the DuckDB oracle compares doubles); the 100 TB upgrade path to
-  * DecimalType(38,6) is a one-line change here because every operator reads
-  * types from these structs rather than hard-coding them.
+  * MariaDB's DDL. The engine states the task board's schema as an explicit
+  * StructType, and a task-board row is the case class `TaskSlice` that every
+  * etl operator takes as its slice.
   */
 object Schemas {
-
-  /** gs.player_profit_log — one row per game round (player_summary_5min.py:71-99). */
-  val playerProfitLog: StructType = StructType(Seq(
-    StructField("platform", StringType),
-    StructField("site_code", StringType),
-    StructField("game_code", StringType),
-    StructField("player_name", StringType),
-    StructField("country", StringType),
-    StructField("bet", DoubleType),
-    StructField("win", DoubleType),
-    StructField("fee", DoubleType),
-    StructField("profit", DoubleType),
-    StructField("refund", DoubleType),
-    StructField("normal_value", DoubleType),
-    StructField("bonus_value", DoubleType),
-    StructField("free_value", DoubleType),
-    StructField("jp_value", DoubleType),
-    StructField("valid_value", DoubleType),
-    StructField("cancel_value", DoubleType),
-    StructField("round_time", TimestampType),
-    StructField("is_robot", IntegerType)))
-
-  /** gs.player_value_log — one row per wallet transfer (trans_summary_5min.py:67-89). */
-  val playerValueLog: StructType = StructType(Seq(
-    StructField("platform", StringType),
-    StructField("site_code", StringType),
-    StructField("player_name", StringType),
-    StructField("country", StringType),
-    StructField("trade_type", StringType),      // 'IN' | 'OUT'
-    StructField("value", DoubleType),
-    StructField("before_value", DoubleType),
-    StructField("after_value", DoubleType),
-    StructField("trade_date", IntegerType),     // yyyymmdd partition key
-    StructField("trade_status", StringType),    // 'SUCCESS' filter
-    StructField("trade_time", TimestampType)))
-
-  /** gs.player — registrations (new_register_summary_1d.py:65-75). */
-  val player: StructType = StructType(Seq(
-    StructField("player_name", StringType),
-    StructField("platform", StringType),
-    StructField("site_code", StringType),
-    StructField("reg_time", TimestampType),
-    StructField("type", StringType),            // 'NORMAL' | 'ROBOT'
-    StructField("status", StringType)))         // 'ACTIVATE'
-
-  /** tg_admin.game_sites — revenue-share dim (player_summary_5min.py:109-113). */
-  val gameSites: StructType = StructType(Seq(
-    StructField("platform", StringType),
-    StructField("code", StringType),
-    StructField("ratio", DoubleType)))
 
   /** task_board / rerun_board (ExecUtils.py:12-20, ProduceNewTask.py:9-11). */
   val taskBoard: StructType = StructType(Seq(

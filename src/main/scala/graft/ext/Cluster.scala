@@ -268,8 +268,8 @@ object Cluster {
   }
 
   /** Minimum hop distance from a seed set, capped at `maxHops` — k-hop
-    * reachability (blast radius, related-item expansion) over a directed
-    * edge set (symmetrize before calling for undirected semantics).
+    * reachability (blast radius, related-item expansion) over an undirected
+    * edge set.
     *
     * Frontier BFS as iterative equi-joins: each round joins ONLY the newest
     * frontier (nodes first reached last round) against the edge set, then
@@ -282,13 +282,13 @@ object Cluster {
     * `edges`: (src, dst); `seeds`: (node). Returns (node, dist) for every
     * node within `maxHops` of a seed (seeds themselves at 0).
     *
-    * `symmetrize = true` treats `edges` as UNDIRECTED pairs: the staged
-    * parquet holds each pair once and the reverse direction is derived by
-    * swapping columns on the cheap staged scan. Callers with undirected
-    * semantics should prefer this over pre-unioning, which would (a) double
-    * the staged write volume and (b) run the edge-derivation pipeline's
-    * final aggregation once per union branch (exchange reuse dedupes only
-    * the partial-agg exchange below it).
+    * Each (src, dst) row is an UNDIRECTED pair: the staged parquet holds
+    * each pair once and the reverse direction is derived by swapping
+    * columns on the cheap staged scan. Callers should hand each pair in one
+    * direction only; pre-unioning both gives the same distances but (a)
+    * doubles the staged write volume and (b) runs the edge-derivation
+    * pipeline's final aggregation once per union branch (exchange reuse
+    * dedupes only the partial-agg exchange below it).
     *
     * Scale-adaptive gate, the [[componentLabels]] discipline: once the
     * edge set is staged, its row count is a cheap columnar probe — when it
@@ -299,7 +299,7 @@ object Cluster {
     * branches are bitwise-equal by construction (pinned by a test). Above
     * the threshold the distributed loop below is unchanged. */
   def khopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      symmetrize: Boolean = false, driverEdgeLimit: Long = 2000000L): DataFrame = {
+      driverEdgeLimit: Long = 2000000L): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     // The edge set is re-joined EVERY round; without a materialization the
     // whole edge-derivation pipeline (for q52: the per-basket pair fan-out)
@@ -324,16 +324,14 @@ object Cluster {
         // the collect reads the just-written columnar scratch (two long
         // columns), so the fully-derived edge pipeline is never re-run;
         // the returned frame holds driver-local rows — no scratch lineage
-        khopDriver(spark, staged, seeds, maxHops, symmetrize)
+        khopDriver(spark, staged, seeds, maxHops)
       } else {
-        // symmetrize as a union of two staged-scan projections, NOT an
-        // explode-both-directions Generate: the scan is cheap columnar
+        // the reverse direction is a union of two staged-scan projections,
+        // NOT an explode-both-directions Generate: the scan is cheap columnar
         // parquet, and the measured explode variant regressed q52
         // 3.4->4.5 s at sf0.1 (per-row array-of-struct allocation through
         // the Generate costs more than the second scan it saves)
-        val e = if (symmetrize)
-          staged.union(staged.select(col("dst").as("src"), col("src").as("dst")))
-        else staged
+        val e = staged.union(staged.select(col("dst").as("src"), col("src").as("dst")))
         var dist = seeds.select(col("node").cast("long").as("node"))
           .distinct().withColumn("dist", lit(0)).localCheckpoint()
         for (h <- 1 to maxHops) {
@@ -356,14 +354,13 @@ object Cluster {
     * mirrors the distributed branch (nullable bigint node, nullable int
     * dist) so consumers and the driver's schema compare see one shape. */
   private def khopDriver(spark: org.apache.spark.sql.SparkSession,
-      staged: DataFrame, seeds: DataFrame, maxHops: Int,
-      symmetrize: Boolean): DataFrame = {
+      staged: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
     def add(a: Long, b: Long): Unit =
       adj.computeIfAbsent(a, _ => new scala.collection.mutable.ArrayBuffer[Long]()) += b
     staged.collect().foreach { r =>
       add(r.getLong(0), r.getLong(1))
-      if (symmetrize) add(r.getLong(1), r.getLong(0))
+      add(r.getLong(1), r.getLong(0))
     }
     val dist = new java.util.HashMap[Long, Int]()
     var frontier = seeds.select(col("node").cast("long").as("node"))
@@ -459,13 +456,13 @@ object Cluster {
     * when isolated.
     *
     * `edges`: undirected (a, b, w) pairs; symmetrized internally.
-    * `distinctPairs = true` asserts the caller's (a, b) pairs are already
-    * distinct (e.g. the output of a pair-keyed aggregation), which lets the
-    * first iteration skip its per-(u,v) weight re-sum.
+    * Precondition: each unordered pair appears at most once (e.g. the output
+    * of a pair-keyed aggregation over a < b), so the first iteration can
+    * vote with each edge's own weight and needs no per-(u,v) re-sum. A
+    * repeated pair would vote with its largest row instead of its sum.
     * Returns (node, label) for every edge endpoint. */
   def labelPropagation(edges: DataFrame, iters: Int,
-      aCol: String = "a", bCol: String = "b", wCol: String = "w",
-      distinctPairs: Boolean = false): DataFrame = {
+      aCol: String = "a", bCol: String = "b", wCol: String = "w"): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val e = edges.select(col(aCol).cast("long").as("u"),
       col(bCol).cast("long").as("v"), col(wCol).cast("long").as("w"))
@@ -514,14 +511,11 @@ object Cluster {
       // join no-op: each symmetric edge (u,v,w) votes (label = v, s =
       // sum of w over duplicate (u,v) rows). So the first round needs no
       // label table at all — and with it goes the nodes-distinct pass that
-      // only existed to build labels0. When the caller guarantees distinct
-      // pairs, s = w directly and the vote collapses into the argmax: ONE
-      // map-side-combinable aggregation over sym (hub-safe — a hot node's
-      // candidates partial-combine to one struct per map task).
-      val firstVotes =
-        if (distinctPairs) sym.select(col("u"), col("w").as("s"), col("v").as("label"))
-        else sym.groupBy(col("u"), col("v").as("label")).agg(sum(col("w")).as("s"))
-      var labels = firstVotes
+      // only existed to build labels0. With distinct pairs (the
+      // precondition), s = w directly and the vote collapses into the
+      // argmax: ONE map-side-combinable aggregation over sym (hub-safe — a
+      // hot node's candidates partial-combine to one struct per map task).
+      var labels = sym.select(col("u"), col("w").as("s"), col("v").as("label"))
         .groupBy("u")
         .agg(max(struct(col("s"), (-col("label")).as("nl"))).as("m"))
         .select(col("u").as("node"), (-col("m.nl")).as("label"))

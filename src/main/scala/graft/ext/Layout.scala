@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering for scan
@@ -46,16 +46,4 @@ object Layout {
     // floor of the double quotient is exact here: numerator < 2^53 and the
     // true quotient is >= 1/(cap+1) away from any integer unless divisible
     floor(least(v, lit(cap)) * lit(1L << bits) / lit(cap + 1)).cast("long")
-
-  /** Cluster `df` by the z-value for writing: range-partition into `files`
-    * output files and sort within each, so every file covers a compact
-    * z-range = a bounded rectangle of (a, b). This is the physical-layout
-    * op; [[zValue]] stays in the plan as an ordinary expression, so AQE and
-    * codegen both apply. */
-  def zOrderLayout(df: DataFrame, a: Column, b: Column, files: Int,
-      bits: Int = 16): DataFrame = {
-    val keyed = df.withColumn("_zval", zValue(a, b, bits))
-    keyed.repartitionByRange(files, col("_zval"))
-      .sortWithinPartitions("_zval")
-  }
 }

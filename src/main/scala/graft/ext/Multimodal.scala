@@ -26,17 +26,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** media table schema: opaque payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),      // image | audio | video
-    StructField("payload", BinaryType),                     // opaque encoded bytes
-    StructField("mime", StringType),
-    StructField("width", IntegerType),                      // images/video
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType),                   // audio/video
-    StructField("source_doc_id", LongType)))                // provenance
-
   /** Decoded-feature schema produced by the decode stage. */
   val featureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),

@@ -127,14 +127,6 @@ object Similarity {
     Seq.fill(bits)(Seq.fill(dim)((rng.nextDouble() * 2 - 1).toFloat))
   }
 
-  /** Random-hyperplane signature for one LSH table: `bits` sign bits packed
-    * into a long. Each bit is a codegen'd DotProduct against a literal
-    * plane — no interpreted lambdas in the inner loop. */
-  def hyperplaneSignature(vec: Column, table: Int, bits: Int = 16, dim: Int = 64): Column =
-    planes(table, bits, dim).zipWithIndex.map { case (p, i) =>
-      when(dot_product(vec, typedlit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** ANN top-k via multi-table hyperplane LSH: rows sharing a signature in
     * any table are candidates; candidates are re-scored exactly and top-k'd.
     * Recall grows with `tables`; cost with bucket collision rate (2^-bits).
@@ -812,15 +804,10 @@ object Similarity {
 
   /** Build and PERSIST the quantized IVF index: `path/centroids` (float
     * vectors — the coarse quantizer stays full-precision) and
-    * `path/postings` partitioned by cluster_id with int8 payloads.
-    *
-    * `centroidSource` pins the coarse quantizer to a reference corpus (used
-    * by rebuild-equality tests and by re-builds that must stay probe-
-    * compatible with an already-served index); default: the corpus itself. */
+    * `path/postings` partitioned by cluster_id with int8 payloads. */
   def buildIvfIndexQuantized(corpus: DataFrame, path: String, nlist: Int = 16,
-      centroidSource: Option[DataFrame] = None,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val centroids = ivfCentroids(centroidSource.getOrElse(corpus), nlist, idCol, vecCol)
+    val centroids = ivfCentroids(corpus, nlist, idCol, vecCol)
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     quantizedPostings(corpus, centroids, idCol, vecCol)
       .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$path/postings")
@@ -830,25 +817,7 @@ object Similarity {
     * [[buildIvfIndexAuto]] for the rationale. */
   def buildIvfIndexQuantizedAuto(corpus: DataFrame, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    buildIvfIndexQuantized(corpus, path, adaptiveNlist(corpus.count()),
-      None, idCol, vecCol)
-
-  /** INCREMENTAL index maintenance: assign + quantize ONLY the new batch
-    * against the index's FIXED centroids and append its postings files.
-    * Existing postings are never read, shuffled, or rewritten — the cost of
-    * admitting a batch is O(|batch|) regardless of corpus size, which is
-    * what makes the index maintainable under 100 TB/day ingestion (the
-    * centroids drift slowly; rebuild them on a cadence, not per batch).
-    * Probing the appended index equals probing a full rebuild over the
-    * union with the same centroids (IncrementalIvfSpec asserts both this
-    * equality and that an append leaves every pre-existing file untouched). */
-  def appendIvfIndexQuantized(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    quantizedPostings(batch, centroids, idCol, vecCol)
-      .write.mode("append").partitionBy("cluster_id").parquet(s"$path/postings")
-  }
+    buildIvfIndexQuantized(corpus, path, adaptiveNlist(corpus.count()), idCol, vecCol)
 
   /** Probe a persisted quantized IVF index. The probed cluster list is tiny
     * and known up front (<= min(nlist, nprobe * |queries|)), so it is pushed

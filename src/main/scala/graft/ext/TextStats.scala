@@ -308,14 +308,6 @@ object TextStats {
         md5(regexp_replace(lower(trim(col(textCol))), "\\s+", " ")).as("norm_fp"),
         expr("array_min(transform(_sh, s -> md5(s)))").as("min_shingle_fp"))
 
-  /** Winnowing fingerprint sets (rolling k-gram hashes, window minima) —
-    * documents sharing any long-enough substring share fingerprints; overlap
-    * ratio is a containment signal. One compiled pass per row. */
-  def winnowingFingerprints(docs: DataFrame, k: Int = 8, window: Int = 4,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol),
-      graft.functions.HashFunctions.winnowing_fp(col(textCol), k, window).as("fingerprints"))
-
   /** Collocation mining: top-k term pairs by document-level pointwise mutual
     * information, `pmi = ln(co_docs * n_docs / (df_a * df_b))` — the signal
     * behind phrase detection and vocabulary merging in corpus pipelines.

@@ -92,12 +92,12 @@ object Sinks {
     val touched = b.select(partitionCols.map(col): _*).rdd
       .mapPartitions(_.toSet.iterator).collect().distinct
     if (touched.isEmpty) return
-    val existing =
-      try Some(spark.read.schema(b.schema).parquet(path))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val merged = existing match {
-      case None => b
-      case Some(old) =>
+    // read with the batch's schema: an existing directory without data files
+    // reads as empty instead of failing schema inference
+    val merged =
+      if (!exists(spark, path)) b
+      else {
+        val old = spark.read.schema(b.schema).parquet(path)
         // Null-SAFE equality throughout: a group key or partition value of
         // NULL is legal (e.g. an unknown country), and `===` would let the
         // stale NULL-key row survive the anti-join (duplicate groups) or
@@ -110,7 +110,7 @@ object Sinks {
         val survivors = old.filter(partFilter).alias("old")
           .join(broadcast(bKeys), anti, "left_anti")
         survivors.select(b.columns.map(col): _*).unionByName(b)
-    }
+      }
     overwriteSlices(merged, path, partitionCols)
   }
 
@@ -135,67 +135,20 @@ object Sinks {
       .saveAsTable(table)
   }
 
-  /** Compact the small files a micro-batched cascade accumulates: rewrite
-    * the named partitions of a slice-partitioned table into `filesPerPartition`
-    * right-sized files each, preserving rows exactly.
-    *
-    * Why this exists: the 5-min tier commits every trigger, so one day of one
-    * table is up to 288 commits — at 100 TB that is millions of KB-sized
-    * files, and scan planning (footer reads, task scheduling) starts to cost
-    * more than the scan. Compaction reads ONLY the partitions named (pruned
-    * scan), repartitions within each, and swaps them back in with the same
-    * dynamic-partition overwrite the cascade itself uses, so a compaction is
-    * idempotent and concurrent slices stay untouched. localCheckpoint
-    * materializes the rows before the overwrite replaces the files being
-    * read (same read-overwrite hazard as the rtp ledger merge).
-    *
-    * Run it behind the live writer (e.g. compact day D-1 while D streams in)
-    * — partition-granular swaps mean readers never see a partial partition.
-    */
-  def compactSlices(spark: SparkSession, path: String, partitionCol: String,
-      partitionValues: Seq[Any], filesPerPartition: Int = 1): Unit = {
-    require(partitionValues.nonEmpty, "name the partitions to compact")
-    import org.apache.spark.sql.functions.{col, lit, pmod, struct, xxhash64}
-    val df = spark.read.parquet(path)
-      .filter(col(partitionCol).isin(partitionValues: _*))
-    // content-derived salt splits a partition into filesPerPartition files
-    // deterministically (constant 0 when filesPerPartition = 1)
-    val salt = pmod(xxhash64(struct(df.columns.map(col): _*)), lit(filesPerPartition))
-    val slice = df
-      .repartition(filesPerPartition * partitionValues.size, col(partitionCol), salt)
-      .localCheckpoint()
-    overwriteSlices(slice, path, Seq(partitionCol))
+  /** Read a report table back with its stored schema. A table that was
+    * never written, or whose directory holds no data files yet, reads as an
+    * empty DataFrame with the given schema. */
+  def readOrEmpty(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (!exists(spark, path)) empty
+    else try spark.read.parquet(path)
+    catch { case _: org.apache.spark.sql.AnalysisException => empty } // no file to infer from
   }
 
-  /** Clustered layout: range-partition the rows by `clusterCols` and sort
-    * within each file, so every parquet file (and row group) covers a
-    * NARROW, near-disjoint range of the cluster key. A pushed-down filter on
-    * those columns then skips whole row groups via their min/max stats —
-    * the scan reads ~1/numFiles of the data instead of all of it (asserted
-    * by scan-metric comparison in SinksSpec).
-    *
-    * This is the non-partitioned complement to `partitionBy`: partition
-    * columns must be low-cardinality (directory explosion); cluster columns
-    * can be high-cardinality (player_name, user_id) because the layout
-    * lives INSIDE the files. At 100 TB, clustering the report tables by
-    * their hot filter keys is the difference between a point lookup
-    * touching one row group and scanning a day's partition.
-    *
-    * `repartitionByRange` samples the key distribution, so file boundaries
-    * balance even under skew; sorting within partitions is a local sort (no
-    * extra shuffle beyond the range exchange). */
-  def clusteredWrite(df: DataFrame, path: String, clusterCols: Seq[String],
-      numFiles: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.repartitionByRange(numFiles, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+  /** Asks the path's Hadoop filesystem. Reading a missing path fails too, but
+    * only after Spark logs the listing's FileNotFoundException. */
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  /** Read a report table back (empty-safe: a table that was never written
-    * yet reads as an empty DataFrame with the given schema). */
-  def readOrEmpty(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    try spark.read.parquet(path)
-    catch { case _: org.apache.spark.sql.AnalysisException => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema) }
 }

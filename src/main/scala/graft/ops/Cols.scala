@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * These encode the reference's recurring scalar patterns
   * (see /root/repo/SURVEY.md §2.8):
   *  - conditional sums `SUM(IF(cond, v, 0))` (A1, task-executor/trans_summary/trans_summary_5min.py:73-79)
-  *  - int date encodings yyyymmdd/yyyymm/hour/minute (F2, trans_summary_5min.py:96-98)
+  *  - int date encodings: yyyymmdd, hour, minute (F2, trans_summary_5min.py:96-98)
   *  - divide-by-zero => 0 normalization (F8, player_summary_5min.py:106)
   *
   * All are composed from built-in codegen'd functions — no UDFs — so they
@@ -47,10 +47,7 @@ object Cols {
   /** F2: int-encoded date `yyyymmdd` (trans_summary_5min.py:96). */
   def yyyymmdd(ts: Column): Column = date_format(ts, "yyyyMMdd").cast("int")
 
-  /** F2: int-encoded month `yyyymm` (trans_summary_1m.py:91). */
-  def yyyymm(ts: Column): Column = date_format(ts, "yyyyMM").cast("int")
-
-  /** yyyymmdd int -> yyyymm int without going back through a timestamp. */
+  /** yyyymmdd int -> yyyyMM int without going back through a timestamp. */
   def monthOfDateInt(dateInt: Column): Column = (dateInt / 100).cast("int")
 
   /** F8: division that yields 0 (not null/Inf) when the denominator is 0 or

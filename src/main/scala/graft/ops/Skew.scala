@@ -6,20 +6,14 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation for hot grouping/join keys (SURVEY §7.4.7: player_name is
   * the natural hot key — a whale player can dominate a partition).
   *
-  * Two tools:
-  *  - [[saltedAgg]]: two-stage aggregation. Stage 1 groups on
-  *    (keys, salt = hash(row) % buckets) so a hot key's rows spread over
-  *    `buckets` reducers; stage 2 merges the partials on the true keys. For
-  *    algebraic aggregates (sum/count/min/max) the result is identical to the
-  *    direct groupBy — at the cost of a second (tiny) shuffle.
-  *  - [[saltedJoinLeft]]: replicated-dimension join. The skewed fact side gets
-  *    a salt column; the dimension side is exploded x buckets so every
-  *    (key, salt) pair still matches. Use when the dim is too big to
-  *    broadcast but the fact's key distribution is heavy-tailed.
+  * [[saltedAgg]] is a two-stage aggregation. Stage 1 groups on
+  * (keys, salt = hash(row) % buckets) so a hot key's rows spread over
+  * `buckets` reducers; stage 2 merges the partials on the true keys. For
+  * algebraic aggregates (sum/count/min/max) the result is identical to the
+  * direct groupBy — at the cost of a second (tiny) shuffle.
   *
   * AQE's skew-join handling (on by default in the engine's sessions) covers
-  * sort-merge joins automatically; these helpers are for aggregations and
-  * for forcing the plan shape when AQE statistics miss the skew.
+  * sort-merge joins automatically; aggregations need the salt.
   */
 object Skew {
 
@@ -62,16 +56,5 @@ object Skew {
           counts.map { case (_, alias) => sum(col(s"_c_$alias")).as(alias) } ++
           mins.map(c => min(col(s"_mn_$c")).as(c)) ++
           maxs.map(c => max(col(s"_mx_$c")).as(c))).tail: _*)
-  }
-
-  /** Salted left equi-join: fact (skewed) x dim (replicated x buckets). */
-  def saltedJoinLeft(fact: DataFrame, dim: DataFrame, keys: Seq[String],
-      buckets: Int): DataFrame = {
-    require(buckets > 1, "buckets must be > 1")
-    val saltedFact = fact.withColumn("_salt",
-      pmod(xxhash64(struct(fact.columns.map(col): _*)), lit(buckets)).cast("int"))
-    val replicatedDim = dim.withColumn("_salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    saltedFact.join(replicatedDim, keys :+ "_salt", "left").drop("_salt")
   }
 }

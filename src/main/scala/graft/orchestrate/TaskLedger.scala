@@ -19,26 +19,6 @@ object TaskLedger {
 
   val taskKeys = Seq("platform", "site_code", "game_code", "assignee")
 
-  /** Typed view of a board DataFrame (SURVEY §1.3): orchestration logic gets
-    * compile-time field checks via Dataset[TaskSlice]; analytic queries stay
-    * DataFrame. Extra physical columns (create_time, done, ...) are dropped
-    * by the encoder projection. */
-  def typedSlices(board: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Dataset[graft.etl.TaskSlice] = {
-    val spark = board.sparkSession
-    import spark.implicits._
-    board.select(
-      coalesce(col("platform"), lit("ALL")).as("platform"),
-      coalesce(col("site_code"), lit("ALL")).as("site_code"),
-      coalesce(col("game_code"), lit("ALL")).as("game_code"),
-      coalesce(col("report_class"), lit("")).as("report_class"),
-      coalesce(col("assignee"), lit("")).as("assignee"),
-      coalesce(col("freq_type"), lit("5min")).as("freq_type"),
-      coalesce(col("level"), lit(100)).cast("int").as("level"),
-      col("gte_time").cast("timestamp").as("gte_time"),
-      col("lt_time").cast("timestamp").as("lt_time"))
-      .as[graft.etl.TaskSlice]
-  }
-
   /** A12: per-key low watermark — max(lt_time) per (platform, site_code,
     * game_code, assignee) (ScanTaskBoard.py:18-21). MariaDB's non-strict
     * GROUP BY returned arbitrary companion columns; the engine pins them with
@@ -134,30 +114,6 @@ object TaskLedger {
     depGate(tasks.filter(!bypassCond), board).unionByName(bypassed)
   }
 
-  /** J8: dep-log refresh (FilterNotMatched.py:26-96). The gate's unmatched
-    * coarse tasks are persisted with their current dep_count; on the next
-    * cycle the stored log is left-joined with this round's counts and the
-    * count/matched columns are overwritten from the fresh side, plus
-    * brand-new unmatched tasks are appended (the reference's
-    * concat+drop_duplicates(keep=False) anti-join idiom). Returns the new
-    * log; matched rows stay for audit, exactly like the reference. */
-  def refreshDepLog(oldLog: DataFrame, gated: DataFrame): DataFrame = {
-    val logKeys = taskKeys ++ Seq("freq_type", "gte_time", "lt_time")
-    val fresh = gated.select(
-      (logKeys.map(col) :+ col("dep_count").as("dep_count_new") :+
-        col("matched").as("matched_new")): _*)
-    if (oldLog.isEmpty) {
-      return gated.select((logKeys.map(col) :+ col("dep_count") :+ col("matched")): _*)
-    }
-    val updated = oldLog.join(fresh, logKeys, "left")
-      .select((logKeys.map(col) :+
-        coalesce(col("dep_count_new"), col("dep_count")).as("dep_count") :+
-        coalesce(col("matched_new"), col("matched")).as("matched")): _*)
-    val appended = gated.join(oldLog, logKeys, "left_anti")
-      .select((logKeys.map(col) :+ col("dep_count") :+ col("matched")): _*)
-    updated.unionByName(appended)
-  }
-
   /** One report entry in the init config (initialize/init_config shape). */
   case class ReportDef(report_class: String, assignee: String, freq_type: String, level: Int)
 
@@ -189,23 +145,6 @@ object TaskLedger {
       .withColumn("site_code", lit(siteCode))
       .withColumn("game_code", lit(gameCode))
       .withColumn("done", lit(0))
-  }
-
-  /** J10: monthly dependency backfill — for every report that has BOTH a 1M
-    * and a 1D entry, synthesize the 1D slices from the month start up to the
-    * init day and mark them done, so the first month-end dep check passes
-    * (init_main.py:72-98; disabled in the reference's main since reports
-    * became realtime — kept for the gated mode). */
-  def monthlyDepInit(initTasks: DataFrame): DataFrame = {
-    val m = initTasks.filter(col("freq_type") === "1M")
-      .select(col("report_class"), col("lt_time").as("m_lt"), col("gte_time").as("m_gte"))
-    val deps = initTasks.filter(col("freq_type") === "1D")
-      .join(m, Seq("report_class"))
-      .withColumn("lt_time", col("gte_time"))   // D start becomes the upper bound
-      .withColumn("gte_time", col("m_lt"))      // month end becomes the lower bound
-      .drop("m_lt", "m_gte")
-      .filter(col("gte_time") =!= col("lt_time"))
-    Slicer.explodeSlices(deps).withColumn("done", lit(1))
   }
 
   /** S9 set-based status update: mark the given slices done with runtime

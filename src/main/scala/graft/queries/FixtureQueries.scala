@@ -180,8 +180,6 @@ object FixtureQueries {
   // Two chained aggs; the second groups by a prefix of the first's keys so
   // the day tier's shuffle partitioning is reusable.
   // ---------------------------------------------------------------------------
-  private val wmaDay = "2024-01-15"
-
   def q6Wma(spark: SparkSession, dir: String): DataFrame = {
     // Population stddev via the sum-of-squares identity over EXACT decimal
     // day sums: sum(ds) and sum(ds²) are order-independent decimals, and the
@@ -1748,10 +1746,9 @@ object FixtureQueries {
   def q49Communities(spark: SparkSession, dir: String): DataFrame =
     graft.ext.Cluster.labelPropagation(
         basketPairs(spark, dir), iters = lpaIters,
-        aCol = "part_a", bCol = "part_b", wCol = "co",
-        // basketPairs is a (part_a, part_b)-keyed aggregation — pairs are
-        // distinct by construction, so iteration 1 is a single argmax agg
-        distinctPairs = true)
+        // basketPairs aggregates on (part_a, part_b) with part_a < part_b, so
+        // each unordered pair appears once, as labelPropagation requires
+        aCol = "part_a", bCol = "part_b", wCol = "co")
       .select(col("node").as("part"), col("label").as("community"))
 
   private[queries] val q49Sql =
@@ -1897,14 +1894,14 @@ object FixtureQueries {
   // set); lineage cut per round like the LPA loop. Pure integers — bitwise.
   // ---------------------------------------------------------------------------
   def q52KHop(spark: SparkSession, dir: String): DataFrame = {
-    // hand khop the DIRECTED pair list and let it symmetrize from its own
-    // staged scan — pre-unioning here would double the scratch write and
-    // re-run the pair aggregation once per union branch
+    // hand khop each pair in one direction and let it derive the reverse
+    // from its own staged scan — pre-unioning here would double the scratch
+    // write and re-run the pair aggregation once per union branch
     val edges = basketPairs(spark, dir)
       .select(col("part_a").as("src"), col("part_b").as("dst"))
     val seeds = Tables.part(spark, dir).filter(col("p_brand") === "Brand#1")
       .select(col("p_partkey").as("node"))
-    graft.ext.Cluster.khopDistances(edges, seeds, maxHops = 3, symmetrize = true)
+    graft.ext.Cluster.khopDistances(edges, seeds, maxHops = 3)
       .select(col("node").as("part"), col("dist").as("hops"))
   }
 

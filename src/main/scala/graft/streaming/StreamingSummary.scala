@@ -80,26 +80,6 @@ object StreamingSummary {
       }
       .start()
 
-  /** Player activity sessionized with an inactivity gap — the streaming twin
-    * of the batch q19 sessionization. Sessions merge as long as events arrive
-    * within `gap` of the running session end; a session is EMITTED (append
-    * mode) once the watermark passes its end, i.e. it can no longer grow.
-    * State per open session only — no cross-key state. */
-  def sessionStream(valueLog: DataFrame, gap: String = "30 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    valueLog
-      .filter(col("trade_status") === "SUCCESS")
-      .withColumn("trade_time", col("trade_time").cast("timestamp"))
-      .withWatermark("trade_time", watermark)
-      .groupBy(session_window(col("trade_time"), gap),
-        col("platform"), col("player_name"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("value_sum"))
-      .select(
-        col("platform"), col("player_name"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("value_sum"))
-
   /** Exactly-once-ish ingestion: drop replayed rows by business key while
     * their event time is inside the watermark. The reference deduplicates by
     * delete-before-insert on the SINK; this removes the duplicates on the

@@ -88,17 +88,6 @@ object RunCascade {
     require(first == second, s"rerun changed row counts: $first vs $second")
     println("CASCADE idempotent rerun OK")
 
-    // maintenance leg: compact the day's 5-min partition (the table the
-    // micro-batch cadence fragments most) and verify rows survive bit-exact
-    val before = spark.read.parquet(paths.trans5min).count()
-    graft.io.Sinks.compactSlices(spark, paths.trans5min, "summary_date",
-      Seq(20240101), filesPerPartition = 1)
-    val after = spark.read.parquet(paths.trans5min).count()
-    require(before == after, s"compaction changed rows: $before -> $after")
-    val nFiles = new java.io.File(s"${paths.trans5min}/summary_date=20240101")
-      .listFiles.count(_.getName.endsWith(".parquet"))
-    require(nFiles == 1, s"expected 1 compacted file, found $nFiles")
-    println(s"CASCADE compaction OK ($before rows, $nFiles file)")
     spark.stop()
   }
 }

@@ -318,30 +318,29 @@ class CorpusSpec extends AnyFunSuite {
     val two = Cluster.khopDistances(edges.repartition(7), Seq(1L, 5L).toDF("node"), maxHops = 2)
       .as[(Long, Int)].collect().toMap
     assert(two == Map(1L -> 0, 5L -> 0, 2L -> 1, 4L -> 1, 3L -> 2))
-    // symmetrize: directed pairs staged once, reverse derived from the
-    // staged scan — must equal the pre-unioned undirected run exactly
-    val sym = Cluster.khopDistances(pairs.toDF("src", "dst"), seeds,
-        maxHops = 3, symmetrize = true)
+    // pairs handed in one direction: the reverse is derived from the staged
+    // scan, which must equal the pre-unioned run exactly
+    val sym = Cluster.khopDistances(pairs.toDF("src", "dst"), seeds, maxHops = 3)
       .as[(Long, Int)].collect().toMap
-    assert(sym == got, s"symmetrize=true must match pre-unioned edges: $sym")
+    assert(sym == got, s"one-direction pairs must match pre-unioned edges: $sym")
     // the driver-BFS gate (default limit covers these tiny sets) vs the
     // forced distributed loop (driverEdgeLimit = 0) must be bitwise equal,
-    // directed and symmetrized alike, and agree on schema nullability
+    // for both inputs, and agree on schema nullability
     val distRun = Cluster.khopDistances(edges, seeds, maxHops = 3,
       driverEdgeLimit = 0L)
     assert(distRun.as[(Long, Int)].collect().toMap == got,
       "forced-distributed run must equal the gated driver BFS")
     val symDist = Cluster.khopDistances(pairs.toDF("src", "dst"), seeds,
-        maxHops = 3, symmetrize = true, driverEdgeLimit = 0L)
+        maxHops = 3, driverEdgeLimit = 0L)
     assert(symDist.as[(Long, Int)].collect().toMap == sym)
     assert(Cluster.khopDistances(edges, seeds, maxHops = 3).schema ===
       distRun.schema, "gated and distributed branches must share one schema")
-    // directed semantics through the gate: 1->2->3 chain reaches nothing
-    // backwards from seed 3
-    val directed = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val back = Cluster.khopDistances(directed, Seq(3L).toDF("node"), maxHops = 2)
+    // undirected through the gate: the 1->2->3 chain is walked backwards
+    // from seed 3
+    val chain = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val back = Cluster.khopDistances(chain, Seq(3L).toDF("node"), maxHops = 2)
       .as[(Long, Int)].collect().toMap
-    assert(back == Map(3L -> 0), s"directed gate must not symmetrize: $back")
+    assert(back == Map(3L -> 0, 2L -> 1, 1L -> 2), s"edges must be undirected: $back")
   }
 
   test("seededShuffle: bijective positions, shard math, layout-invariant, sf1-scale ids safe") {

@@ -386,7 +386,8 @@ class ExtSpec extends AnyFunSuite {
     val other = (100 to 140).map(i => s"tok$i").mkString(" ")
     val df = Seq((1L, base), (2L, base), (3L, edited), (4L, other), (5L, "short"))
       .toDF("doc_id", "text")
-    val fp = TextStats.winnowingFingerprints(df).collect()
+    val fp = df.select(c("doc_id"),
+        graft.functions.HashFunctions.winnowing_fp(c("text")).as("fingerprints")).collect()
       .map(r => r.getLong(0) -> r.getAs[collection.Seq[Long]]("fingerprints")).toMap
     assert(fp(1L) === fp(2L), "identical texts share all fingerprints")
     val overlap = fp(1L).toSet.intersect(fp(3L).toSet).size.toDouble / fp(1L).size
@@ -986,20 +987,6 @@ class ExtSpec extends AnyFunSuite {
     assert(bSorted.max > 200, "single-dim layout must NOT bound the other dim (sanity)")
   }
 
-  test("zOrderLayout: range partitions carry disjoint z-ranges (prunable file stats)") {
-    import spark.implicits._
-    val pts = (0 until 4096).map(i => ((i * 53L) % 256L, (i * 29L) % 256L)).toDF("a", "b")
-    val laid = Layout.zOrderLayout(pts, col("a"), col("b"), files = 8, bits = 8)
-    val ranges = laid.select(spark_partition_id().as("pid"), col("_zval"))
-      .groupBy("pid").agg(min("_zval").as("lo"), max("_zval").as("hi"))
-      .as[(Int, Long, Long)].collect().sortBy(_._1)
-    assert(ranges.length > 1, "layout must spread across multiple files")
-    ranges.sliding(2).foreach {
-      case Array(p, q) => assert(p._3 <= q._2, s"file z-ranges overlap: $p vs $q")
-      case _ =>
-    }
-  }
-
   test("pcaTopComponent: planted dominant axis recovered; loadings unit-ish; layout-invariant") {
     import spark.implicits._
     // dim 4 (power of two): variance concentrated on axis 0, slight axis-1
@@ -1282,33 +1269,20 @@ class ExtSpec extends AnyFunSuite {
     assert(cc.select("lbl").distinct().count() === 1L, "bridge graph is one component")
   }
 
-  test("labelPropagation: distinctPairs shortcut and duplicate-pair re-sum match the spec") {
-    // the identity-labeling first iteration must produce the same fixpoint
-    // through all three paths: default (general re-sum), distinctPairs=true
-    // (single-argmax first round), and — for inputs with DUPLICATE pairs —
-    // the general path must sum the duplicates' weights before the argmax
+  test("labelPropagation: distinct-pair input matches the literal spec replay") {
+    // the precondition: each unordered pair appears once, so iteration 1
+    // against the identity labeling may vote with each edge's own weight;
+    // the literal spec (join + per-(u,label) sum + argmax from the identity
+    // labeling) must reach the same labels
     val edges = Seq(
       (1L, 2L, 2L), (1L, 3L, 2L), (2L, 3L, 2L),
       (4L, 5L, 2L), (4L, 6L, 2L), (5L, 6L, 2L),
       (3L, 4L, 1L)).toDF("a", "b", "w")
-    def labels(df: org.apache.spark.sql.DataFrame, dp: Boolean) =
-      Cluster.labelPropagation(df, iters = 2, distinctPairs = dp).collect()
-        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L)
-    assert(labels(edges, dp = false) === expected)
-    assert(labels(edges, dp = true) === expected,
-      "distinctPairs shortcut must not change the fixpoint on distinct input")
-    // duplicate-pair input: (1,3) appears twice at w=2; iteration 1 must
-    // vote with the SUM (s=4 beats the single w=2 edges, so node 1 takes
-    // label 3 in round 1). The general path handles it; hand-traced 2-round
-    // fixpoint on this graph still converges to the same communities.
-    val dup = edges.union(Seq((1L, 3L, 2L)).toDF("a", "b", "w"))
-    val g = labels(dup, dp = false)
-    assert(g(5L) === 4L && g(6L) === 4L, s"far triangle unaffected: $g")
-    // cross-check the duplicate-input result against a literal replay of the
-    // spec (join + per-(u,label) sum + argmax) so the re-sum is pinned
-    val sym = dup.select(col("a").as("u"), col("b").as("v"), col("w"))
-      .union(dup.select(col("b").as("u"), col("a").as("v"), col("w")))
+    val got = Cluster.labelPropagation(edges, iters = 2).collect()
+      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L))
+    val sym = edges.select(col("a").as("u"), col("b").as("v"), col("w"))
+      .union(edges.select(col("b").as("u"), col("a").as("v"), col("w")))
     var ref = sym.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to 2) {
@@ -1318,7 +1292,7 @@ class ExtSpec extends AnyFunSuite {
         .select(col("u").as("node"), (-col("m.nl")).as("label"))
     }
     val refMap = ref.collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-    assert(g === refMap, s"general path must equal the spec replay: $g vs $refMap")
+    assert(got === refMap, s"labelPropagation must equal the spec replay: $got vs $refMap")
   }
 
   test("labelPropagation: scratch staging honors the conf seam and cleans up after itself") {

@@ -7,11 +7,9 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Incremental maintenance + serving shape of the quantized IVF index:
-  * append-batch posting writes against fixed centroids must (a) probe
-  * identically to a full rebuild over the union, (b) never touch an
-  * existing postings file, and (c) serve probes that physically read only
-  * the probed clusters' partitions. */
+/** Serving shape of the persisted quantized IVF index: an indexed probe
+  * equals the inline formulation bitwise and physically reads only the
+  * probed clusters' partitions. */
 class IncrementalIvfSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
@@ -35,44 +33,6 @@ class IncrementalIvfSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .sortBy(t => (t._1, t._4))
     assert(indexed === inline)
-  }
-
-  test("append-maintained index probes identically to a full rebuild on fixed centroids") {
-    val incDir = tmp()
-    val fullDir = tmp()
-    val part1 = emb.filter(col("vec_id") % 5 =!= 0)
-    val part2 = emb.filter(col("vec_id") % 5 === 0)
-    // serve from part1, then admit part2 incrementally
-    Similarity.buildIvfIndexQuantized(part1, incDir)
-    Similarity.appendIvfIndexQuantized(spark, incDir, part2)
-    // ground truth: one-shot build over the union with the SAME coarse
-    // quantizer (centroids pinned to part1 — incremental maintenance keeps
-    // centroids fixed between rebuild cadences)
-    Similarity.buildIvfIndexQuantized(emb, fullDir, centroidSource = Some(part1))
-    val queries = emb.filter(col("vec_id") < 10)
-    assert(probed(incDir, queries, 5) === probed(fullDir, queries, 5))
-  }
-
-  test("append writes only new postings files; every pre-existing file is untouched") {
-    val dir = tmp()
-    Similarity.buildIvfIndexQuantized(emb.filter(col("vec_id") % 5 =!= 0), dir)
-    def snapshot(): Map[String, (Long, java.nio.file.attribute.FileTime)] = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir, "postings")
-      Files.walk(root).iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-        .map(p => p.toString -> (Files.size(p), Files.getLastModifiedTime(p)))
-        .toMap
-    }
-    val before = snapshot()
-    assert(before.nonEmpty)
-    Similarity.appendIvfIndexQuantized(spark, dir, emb.filter(col("vec_id") % 5 === 0))
-    val after = snapshot()
-    assert(after.size > before.size, "append must add postings files")
-    before.foreach { case (path, meta) =>
-      assert(after.get(path).contains(meta),
-        s"append must not rewrite an existing postings file: $path")
-    }
   }
 
   test("probe scans only the probed clusters' partitions (static pruning)") {

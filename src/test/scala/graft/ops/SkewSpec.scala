@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SkewSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   lazy val vlog = TestData.valueLog(spark).cache()
 
@@ -36,19 +35,5 @@ class SkewSpec extends AnyFunSuite {
       assert(math.abs(smn - 2 * mn) < 1e-9, s"min mismatch for $k")
       assert(math.abs(smx - 0.9 * mx) < 1e-9, s"max mismatch for $k")
     }
-  }
-
-  test("salted left join equals the plain join") {
-    val dim = Seq(("u1", "gold"), ("u2", "silver")).toDF("player_name", "tier")
-    val fact = vlog.select("player_name", "value")
-    val plain = fact.join(dim, Seq("player_name"), "left")
-      .groupBy("player_name", "tier").agg(sum("value").as("v"))
-    val salted = Skew.saltedJoinLeft(fact, dim, Seq("player_name"), buckets = 4)
-      .groupBy("player_name", "tier").agg(sum("value").as("v"))
-    val diff = plain.alias("a").join(salted.alias("b"),
-        plain("player_name") <=> salted("player_name") && plain("tier") <=> salted("tier"),
-        "full_outer")
-      .filter(col("a.v").isNull || col("b.v").isNull || abs(col("a.v") - col("b.v")) > 1e-9)
-    assert(diff.isEmpty)
   }
 }

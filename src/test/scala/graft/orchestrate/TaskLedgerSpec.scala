@@ -27,28 +27,6 @@ class TaskLedgerSpec extends AnyFunSuite {
     assert(init.filter(col("done") =!= 0).isEmpty)
   }
 
-  test("monthly dep backfill: done 1D slices from month start to init day") {
-    val init = TaskLedger.initTaskList(spark, reports, "2024-03-15 00:00:00")
-    val deps = TaskLedger.monthlyDepInit(init)
-    // 1D slices covering [2024-03-01, 2024-03-15) = 14 days, all done
-    assert(deps.count() === 14)
-    assert(deps.filter(col("done") =!= 1).isEmpty)
-    assert(deps.agg(min("gte_time"), max("lt_time")).head ===
-      org.apache.spark.sql.Row(ts("2024-03-01 00:00:00"), ts("2024-03-15 00:00:00")))
-  }
-
-  test("typedSlices gives a compile-checked Dataset[TaskSlice] view of the board") {
-    val init = TaskLedger.initTaskList(spark, reports, "2024-03-15 00:00:00")
-    val ds = TaskLedger.typedSlices(init)
-    val slices: Array[graft.etl.TaskSlice] = ds.collect()
-    assert(slices.length === 4)
-    assert(slices.forall(_.platform == "ALL"))
-    assert(slices.map(_.freq_type).toSet === Set("5min", "1H", "1D", "1M"))
-    // typed objects drive the executor API directly
-    val one = slices.find(_.freq_type == "1D").get
-    assert(one.gte_time.before(one.lt_time))
-  }
-
   test("watermark scan picks max lt_time with deterministic companions") {
     val board = Seq(
       ("ALL", "ALL", "ALL", "a1", "tc", "5min", 100, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:05:00"), 1),
