@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
+import scala.util.control.NonFatal
+
 /** One place that states what the engine assumes about each fixture table's
   * LOADED schema, and fails with a named table+column instead of letting a
   * drifted physical encoding surface as a DATATYPE_MISMATCH analysis error
@@ -63,15 +65,18 @@ object SchemaGuard {
     * unexpected loaded type). Empty = every engine assumption holds. */
   def violations(spark: SparkSession, dir: String): Seq[Violation] =
     expected.toSeq.sortBy(_._1).flatMap { case (table, cols) =>
+      val path = s"$dir/$table.parquet"
       val loaded =
-        try {
-          // events needs the nanosAsLong branch-point visible, same as Tables
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          Some(spark.read.parquet(s"$dir/$table.parquet").schema)
-        } catch { case _: Throwable => None }
+        if (!graft.io.Sinks.exists(spark, path)) Left("table missing")
+        else
+          try {
+            // events needs the nanosAsLong branch-point visible, same as Tables
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            Right(spark.read.parquet(path).schema)
+          } catch { case NonFatal(e) => Left(s"table unreadable ($e)") }
       loaded match {
-        case None => Seq(Violation(table, "*", s"table missing or unreadable at $dir/$table.parquet"))
-        case Some(schema) =>
+        case Left(why) => Seq(Violation(table, "*", s"$why at $path"))
+        case Right(schema) =>
           val byName = schema.fields.map(f => f.name -> f.dataType).toMap
           cols.toSeq.sortBy(_._1).flatMap { case (name, ok) =>
             byName.get(name) match {

@@ -26,24 +26,17 @@ object NewRegisterSummary {
   val grain = Seq("platform", "site_code", "game_code", "country")
 
   def oneDay(playerSummary5min: DataFrame, players: DataFrame, slice: TaskSlice): DataFrame = {
-    val gteTs = slice.gte_time.toLocalDateTime
-    val gte = gteTs.toString.replace('T', ' ')
-    val lt = slice.lt_time.toLocalDateTime.toString.replace('T', ' ')
-    val d = gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-
     // New NORMAL members registered inside the day slice.
     val newReg = players
-      .filter(inWindow(col("reg_time"), gte, lt))
+      .filter(inWindow(col("reg_time"), slice.gte, slice.lt))
       .filter(col("type") === "NORMAL")
       .select("player_name")
 
     // The day's per-player sums from the 5min tier (the reference pins
     // platform/site_code from the task row; ALL wildcards cover the rest).
     val daySums = playerSummary5min
-      .filter(col("summary_date") === d)
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .filter(eqOrAll(col("game_code"), slice.game_code))
+      .filter(col("summary_date") === slice.dateInt)
+      .filter(slice.gameScope)
       .groupBy(col("platform"), col("site_code"), col("game_code"),
         col("player_name"), col("country"))
       .agg(
@@ -68,6 +61,6 @@ object NewRegisterSummary {
         sum(col("profit_amount")).as("profit_amount"),
         sum(col("refund_amount")).as("refund_amount"),
         count(col("player_name")).as("reg_count"))
-      .withColumn("summary_date", lit(d))
+      .withColumn("summary_date", lit(slice.dateInt))
   }
 }

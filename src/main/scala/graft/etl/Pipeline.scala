@@ -46,11 +46,8 @@ object Pipeline {
   def runTransDay(spark: SparkSession, valueLog: DataFrame, paths: Paths,
       day: java.time.LocalDate): Unit = {
     val (daySlice, hourSlices) = daySlices(day)
-    val d0s = day.atStartOfDay().toString.replace('T', ' ')
-    val d1s = day.plusDays(1).atStartOfDay().toString.replace('T', ' ')
 
-    val fiveMin = TransSummary.fiveMinRange(valueLog, d0s, d1s)
-      .withColumn("start_time", col("start_time"))
+    val fiveMin = TransSummary.fiveMinRange(valueLog, daySlice.gte, daySlice.lt)
     Sinks.overwriteSlices(fiveMin, paths.trans5min, Seq("summary_date"))
 
     val tier5 = spark.read.parquet(paths.trans5min)
@@ -65,10 +62,8 @@ object Pipeline {
   def runPlayerDay(spark: SparkSession, profitLog: DataFrame, gameSites: DataFrame,
       paths: Paths, day: java.time.LocalDate, cfg: RtpConfig = RtpConfig()): Unit = {
     val (daySlice, hourSlices) = daySlices(day)
-    val d0s = day.atStartOfDay().toString.replace('T', ' ')
-    val d1s = day.plusDays(1).atStartOfDay().toString.replace('T', ' ')
 
-    val fiveMin = PlayerSummary.fiveMinRange(profitLog, gameSites, d0s, d1s, cfg)
+    val fiveMin = PlayerSummary.fiveMinRange(profitLog, gameSites, daySlice.gte, daySlice.lt, cfg)
     Sinks.overwriteSlices(fiveMin, paths.player5min, Seq("summary_date"))
 
     val tier5 = spark.read.parquet(paths.player5min)
@@ -112,12 +107,11 @@ object Pipeline {
       paths.riskGame1d, Seq("summary_date"))
 
     val snapshot = RiskCtrl.rtpSnapshot(ps1h, daySlice)
-    val dInt = day.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
     val old = Sinks.readOrEmpty(spark, paths.riskRtp1d, snapshot.schema)
     // the ledger merge operates on THIS day's partition (the reference reads
     // WHERE summary_date = d); first run has no ledger columns yet -> empty
     val oldForDay =
-      if (old.columns.contains("alert_count")) old.filter(col("summary_date") === dInt)
+      if (old.columns.contains("alert_count")) old.filter(col("summary_date") === daySlice.dateInt)
       else old.limit(0)
     // The merge below dynamic-partition-overwrites the SAME path the ledger
     // was just read from. Path-based V1 overwrites bypass Spark's

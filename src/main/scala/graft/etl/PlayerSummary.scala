@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.ops.Cols._
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The player_summary cascade: game rounds -> 5min -> 1h -> 1d -> 1m.
@@ -29,20 +29,15 @@ object PlayerSummary {
     "normal_amount", "bonus_amount", "free_amount", "jp_amount",
     "valid_amount", "cancel_amount")
 
-  /** A2+A3+F8 battery for one slice of player_profit_log. */
-  def fiveMin(profitLog: DataFrame, gameSites: DataFrame, slice: TaskSlice,
-      cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val gteTs = slice.gte_time.toLocalDateTime
-    val gte = gteTs.toString.replace('T', ' ')
-    val lt = slice.lt_time.toLocalDateTime.toString.replace('T', ' ')
-
+  /** The 5-min aggregation of both paths: the A2+A3+F8 battery over human
+    * rounds grouped by key and `stamp` (the row's `start_time`), the ratio
+    * enrichment, the int time keys derived from the stamp, and the risky
+    * flag. */
+  private def aggregate(profitLog: DataFrame, gameSites: DataFrame, stamp: Column,
+      cfg: RtpConfig): DataFrame = {
     val agg = profitLog
-      .filter(inWindow(col("round_time"), gte, lt))
       .filter(col("is_robot") === 0)
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .filter(eqOrAll(col("game_code"), slice.game_code))
-      .groupBy(keys.map(col): _*)
+      .groupBy((keys.map(col) :+ stamp.as("start_time")): _*)
       .agg(
         count(col("bet")).as("b_count"),
         sum(col("bet")).as("b_amount"),
@@ -66,58 +61,38 @@ object PlayerSummary {
         agg("platform") === dim("platform") && agg("site_code") === dim("code"), "left")
       .drop(dim("platform")).drop(dim("code"))
       .na.fill(0.0, Seq("ratio"))
-      // F7: profit split (player_summary_5min.py:121-123).
-      .withColumn("p_before_amount", col("profit_amount"))
-      .withColumn("p_after_amount", col("profit_amount") * (lit(1.0) - col("ratio")))
-      .withColumn("tg_after_amount", col("profit_amount") * col("ratio"))
-      // F2: time columns stamped from the slice start.
-      .withColumn("summary_date",
-        lit(gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt))
-      .withColumn("hours", lit(gteTs.getHour))
-      .withColumn("mins", lit(gteTs.getMinute))
-      .withColumn("start_time", lit(gte).cast("timestamp"))
+      .transform(profitSplit)
+      .withColumn("summary_date", yyyymmdd(col("start_time")))
+      .withColumn("hours", hour(col("start_time")))
+      .withColumn("mins", minute(col("start_time")))
 
     checkIfRisky(enriched, cfg)
   }
+
+  /** F7: profit split by the site's ratio (player_summary_5min.py:121-123). */
+  private def profitSplit(df: DataFrame): DataFrame =
+    df.withColumn("p_before_amount", col("profit_amount"))
+      .withColumn("p_after_amount", col("profit_amount") * (lit(1.0) - col("ratio")))
+      .withColumn("tg_after_amount", col("profit_amount") * col("ratio"))
+
+  /** A2+A3+F8 battery for one slice of player_profit_log, stamped with the
+    * slice start: a slice longer than 5 minutes still gives one row per key. */
+  def fiveMin(profitLog: DataFrame, gameSites: DataFrame, slice: TaskSlice,
+      cfg: RtpConfig = RtpConfig()): DataFrame =
+    TaskSlice.startAfterMins(aggregate(
+      profitLog
+        .filter(inWindow(col("round_time"), slice.gte, slice.lt))
+        .filter(slice.gameScope),
+      gameSites, slice.startStamp, cfg))
 
   /** Backfill/catch-up path: ALL 5-min slices inside `[gte, lt)` in one
     * aggregation (cf. TransSummary.fiveMinRange) — slice stamps from the
     * floored round_time; identical to per-slice [[fiveMin]] for aligned
     * slices. */
   def fiveMinRange(profitLog: DataFrame, gameSites: DataFrame, gte: String, lt: String,
-      cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val floored = graft.time.Slicer.floorTo(col("round_time").cast("timestamp"), "5min")
-    val base = profitLog
-      .filter(col("is_robot") === 0)
-      .filter(inWindow(col("round_time"), gte, lt))
-      .groupBy((keys.map(col) :+ floored.as("start_time")): _*)
-      .agg(
-        count(col("bet")).as("b_count"),
-        sum(col("bet")).as("b_amount"),
-        sum(col("win")).as("w_amount"),
-        sum(col("fee")).as("fee_amount"),
-        sum(col("profit")).as("profit_amount"),
-        sum(col("refund")).as("refund_amount"),
-        sum(col("normal_value")).as("normal_amount"),
-        sum(col("bonus_value")).as("bonus_amount"),
-        sumClamped(col("free_value")).as("free_amount"),
-        sumClamped(col("jp_value")).as("jp_amount"),
-        sum(col("valid_value")).as("valid_amount"),
-        sum(col("cancel_value")).as("cancel_amount"),
-        safeDiv(sum(col("profit")), sum(col("bet"))).as("rtp"))
-    val dim = gameSites.select(col("platform"), col("code"), col("ratio"))
-    val enriched = base
-      .join(broadcast(dim), base("platform") === dim("platform") && base("site_code") === dim("code"), "left")
-      .drop(dim("platform")).drop(dim("code"))
-      .na.fill(0.0, Seq("ratio"))
-      .withColumn("p_before_amount", col("profit_amount"))
-      .withColumn("p_after_amount", col("profit_amount") * (lit(1.0) - col("ratio")))
-      .withColumn("tg_after_amount", col("profit_amount") * col("ratio"))
-      .withColumn("summary_date", graft.ops.Cols.yyyymmdd(col("start_time")))
-      .withColumn("hours", hour(col("start_time")))
-      .withColumn("mins", minute(col("start_time")))
-    checkIfRisky(enriched, cfg)
-  }
+      cfg: RtpConfig = RtpConfig()): DataFrame =
+    aggregate(profitLog.filter(inWindow(col("round_time"), gte, lt)), gameSites,
+      graft.time.Slicer.floorTo(col("round_time").cast("timestamp"), "5min"), cfg)
 
   /** F1: ordered mask semantics (player_summary_5min.py:136-148) — base rule
     * first, then the unconditional profit override. Encoded as a single
@@ -131,53 +106,28 @@ object PlayerSummary {
           col("rtp") >= cfg.rtpThreshold, 1)
         .otherwise(0))
 
-  /** A4 rollup step shared by 1h/1d/1m: sum the presummed battery, recompute
-    * rtp from the re-summed profit/bet, carry ratio with first() (MariaDB
-    * non-strict GROUP BY made deterministic), rebuild the profit split. */
-  private def reAgg(prev: DataFrame, slice: TaskSlice): DataFrame =
-    prev
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .filter(eqOrAll(col("game_code"), slice.game_code))
+  /** A4 rollup step shared by 1h/1d/1m: sum the presummed battery over the
+    * slice's cut of the tier below, recompute rtp from the re-summed
+    * profit/bet, carry ratio with first() (MariaDB non-strict GROUP BY made
+    * deterministic), rebuild the profit split, stamp, flag. */
+  private def reAgg(prev: DataFrame, slice: TaskSlice, cut: TierCut, cfg: RtpConfig): DataFrame =
+    checkIfRisky(cut.stamp(prev
+      .filter(cut.rows)
+      .filter(slice.gameScope)
       .groupBy(keys.map(col): _*)
       .agg(
         sum(col("b_count")).as("b_count"),
         sumCols.map(c => sum(col(c)).as(c)) :+
           first(col("ratio")).as("ratio"): _*)
       .withColumn("rtp", safeDiv(col("profit_amount"), col("b_amount")))
-      .withColumn("p_before_amount", col("profit_amount"))
-      .withColumn("p_after_amount", col("profit_amount") * (lit(1.0) - col("ratio")))
-      .withColumn("tg_after_amount", col("profit_amount") * col("ratio"))
+      .transform(profitSplit)), cfg)
 
-  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val dateInt = g.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-    val rolled = reAgg(
-      fiveMinTier.filter(col("summary_date") === dateInt && col("hours") === g.getHour), slice)
-      .withColumn("summary_date", lit(dateInt))
-      .withColumn("hours", lit(g.getHour))
-      .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp"))
-    checkIfRisky(rolled, cfg)
-  }
+  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame =
+    reAgg(fiveMinTier, slice, slice.hourCut, cfg)
 
-  def oneDay(oneHourTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val dateInt = g.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-    val rolled = reAgg(oneHourTier.filter(col("summary_date") === dateInt), slice)
-      .withColumn("summary_date", lit(dateInt))
-      .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp"))
-    checkIfRisky(rolled, cfg)
-  }
+  def oneDay(oneHourTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame =
+    reAgg(oneHourTier, slice, slice.dayCut, cfg)
 
-  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val monthInt = g.getYear * 100 + g.getMonthValue
-    val rolled = reAgg(
-      oneDayTier.filter(
-        col("summary_date") >= monthInt * 100 && col("summary_date") < (monthInt + 1) * 100),
-      slice)
-      .withColumn("summary_month", lit(monthInt))
-      .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp"))
-    checkIfRisky(rolled, cfg)
-  }
+  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame =
+    reAgg(oneDayTier, slice, slice.monthCut, cfg)
 }

@@ -26,20 +26,6 @@ object RiskCtrl {
   val playerKeys = Seq("platform", "site_code", "player_name", "country")
   val gameKeys = Seq("platform", "site_code", "game_code", "country")
 
-  private def dateInt(slice: TaskSlice): Int =
-    slice.gte_time.toLocalDateTime.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-
-  private def dateIntMinus(slice: TaskSlice, days: Int): Int =
-    slice.gte_time.toLocalDateTime.minusDays(days)
-      .format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-
-  private def wildcardFilters(df: DataFrame, slice: TaskSlice, withGame: Boolean): DataFrame = {
-    val base = df
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-    if (withGame) base.filter(eqOrAll(col("game_code"), slice.game_code)) else base
-  }
-
   // -------------------------------------------------------------------------
   // risk_ctrl_player_1d (risk_ctrl_player_1d.py)
   // -------------------------------------------------------------------------
@@ -49,11 +35,11 @@ object RiskCtrl {
   def playerMeta(playerSummary1h: DataFrame, transSummary1h: DataFrame,
       playerSummary1d: DataFrame, transSummary1d: DataFrame,
       slice: TaskSlice): DataFrame = {
-    val d = dateInt(slice)
-    val d8 = dateIntMinus(slice, 8)
+    val d = slice.dateInt
+    val d8 = slice.dateIntBefore(8)
     val k = playerKeys.map(col)
 
-    val current = wildcardFilters(playerSummary1h, slice, withGame = true)
+    val current = playerSummary1h.filter(slice.gameScope)
       .filter(col("summary_date") === d)
       .groupBy(k: _*)
       .agg(
@@ -61,7 +47,7 @@ object RiskCtrl {
         sum(col("profit_amount")).as("p_cur"),
         safeDiv(sum(col("profit_amount")), sum(col("b_amount"))).as("rtp_cur"))
 
-    val currentTrans = wildcardFilters(transSummary1h, slice, withGame = false)
+    val currentTrans = transSummary1h.filter(slice.scope)
       .filter(col("summary_date") === d)
       .groupBy(k: _*)
       .agg(sum(col("trans_out_amount") - col("trans_in_amount")).as("net_trans_cur"))
@@ -175,11 +161,11 @@ object RiskCtrl {
 
   def gameMeta(playerSummary1h: DataFrame, playerSummary1d: DataFrame,
       slice: TaskSlice): DataFrame = {
-    val d = dateInt(slice)
-    val d8 = dateIntMinus(slice, 8)
+    val d = slice.dateInt
+    val d8 = slice.dateIntBefore(8)
     val k = gameKeys.map(col)
 
-    val current = wildcardFilters(playerSummary1h, slice, withGame = true)
+    val current = playerSummary1h.filter(slice.gameScope)
       .filter(col("summary_date") === d)
       .groupBy(k: _*)
       .agg(
@@ -219,8 +205,8 @@ object RiskCtrl {
     * (risk_ctrl_rtp_1d.py:77-118). */
   def rtpSnapshot(playerSummary1h: DataFrame, slice: TaskSlice,
       cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val d = dateInt(slice)
-    val snap = wildcardFilters(playerSummary1h, slice, withGame = true)
+    val d = slice.dateInt
+    val snap = playerSummary1h.filter(slice.gameScope)
       .filter(col("summary_date") === d)
       .groupBy(rtpKeys.map(col): _*)
       .agg(
@@ -256,7 +242,7 @@ object RiskCtrl {
   def rtpLedgerMerge(old: DataFrame, snapshot: DataFrame, now: java.sql.Timestamp,
       cfg: RtpConfig = RtpConfig()): DataFrame = {
     val epoch = lit("1970-01-01 00:00:00").cast("timestamp")
-    val nowLit = lit(now.toLocalDateTime.toString.replace('T', ' ')).cast("timestamp")
+    val nowLit = TaskSlice.stamp(now)
 
     if (old.isEmpty) {
       return snapshot

@@ -25,35 +25,41 @@ object TransSummary {
     "trans_in_amount", "trans_out_amount", "trans_in_count", "trans_out_count",
     "trans_out_lost_amount")
 
-  /** A1 battery over one slice of player_value_log. `slice` carries the
-    * half-open window and ALL-wildcard filters (P1/P2/P3/P4). */
-  def fiveMin(valueLog: DataFrame, slice: TaskSlice): DataFrame = {
-    val gte = slice.gte_time.toLocalDateTime.toString.replace('T', ' ')
-    val lt = slice.lt_time.toLocalDateTime.toString.replace('T', ' ')
-    val gteTs = slice.gte_time.toLocalDateTime
+  /** A1 battery (trans_summary_5min.py:73-79): IN/OUT sums and counts, and
+    * the OUT leg's lost amount. The streaming 5-min tier aggregates with it
+    * too. */
+  private[graft] def battery: Seq[Column] = Seq(
+    sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
+    sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
+    sum(when(col("trade_type") === "IN", 1L).otherwise(0L)).as("trans_in_count"),
+    sum(when(col("trade_type") === "OUT", 1L).otherwise(0L)).as("trans_out_count"),
+    (sumIf(col("trade_type") === "OUT", col("before_value"))
+      - sumIf(col("trade_type") === "OUT", col("after_value"))
+      - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
 
+  /** The 5-min aggregation of both batch paths: successful transfers grouped
+    * by key and `stamp` (the row's `start_time`), with the int time keys
+    * derived from the stamp (trans_summary_5min.py:96-98). */
+  private def aggregate(valueLog: DataFrame, stamp: Column): DataFrame =
     valueLog
-      // P3: redundant int partition-key predicate (trade_date = yyyymmdd of
-      // the slice) — in Spark this prunes parquet partitions before the scan.
-      .filter(col("trade_date") === lit(gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt))
       .filter(col("trade_status") === "SUCCESS")
-      .filter(inWindow(col("trade_time"), gte, lt))
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .groupBy(keys.map(col): _*)
-      .agg(
-        sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
-        sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
-        sum(when(col("trade_type") === "IN", 1L).otherwise(0L)).as("trans_in_count"),
-        sum(when(col("trade_type") === "OUT", 1L).otherwise(0L)).as("trans_out_count"),
-        (sumIf(col("trade_type") === "OUT", col("before_value"))
-          - sumIf(col("trade_type") === "OUT", col("after_value"))
-          - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
-      .withColumn("summary_date", lit(gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt))
-      .withColumn("hours", lit(gteTs.getHour))
-      .withColumn("mins", lit(gteTs.getMinute))
-      .withColumn("start_time", lit(gte).cast("timestamp"))
-  }
+      .groupBy((keys.map(col) :+ stamp.as("start_time")): _*)
+      .agg(battery.head, battery.tail: _*)
+      .withColumn("summary_date", yyyymmdd(col("start_time")))
+      .withColumn("hours", hour(col("start_time")))
+      .withColumn("mins", minute(col("start_time")))
+
+  /** A1 battery over one slice of player_value_log, stamped with the slice
+    * start: a slice longer than 5 minutes still gives one row per key. */
+  def fiveMin(valueLog: DataFrame, slice: TaskSlice): DataFrame =
+    TaskSlice.startAfterMins(aggregate(
+      valueLog
+        // P3: redundant int partition-key predicate (trade_date = yyyymmdd of
+        // the slice) — in Spark this prunes parquet partitions before the scan.
+        .filter(col("trade_date") === slice.dateInt)
+        .filter(inWindow(col("trade_time"), slice.gte, slice.lt))
+        .filter(slice.scope),
+      slice.startStamp))
 
   /** Backfill/catch-up path: ALL 5-min slices inside `[gte, lt)` in ONE
     * aggregation, grouping by the floored event time instead of running one
@@ -61,67 +67,29 @@ object TransSummary {
     * trans_summary_5min.py:23). Output is identical to per-slice [[fiveMin]]
     * for aligned slices — the slice stamp IS the 5-min floor of trade_time.
     * At scale this is one shuffle over the day instead of 288 scheduled jobs. */
-  def fiveMinRange(valueLog: DataFrame, gte: String, lt: String): DataFrame = {
-    val slice = graft.time.Slicer.floorTo(col("trade_time").cast("timestamp"), "5min")
-    valueLog
-      .filter(col("trade_status") === "SUCCESS")
-      .filter(inWindow(col("trade_time"), gte, lt))
-      .groupBy((keys.map(col) :+ slice.as("start_time")): _*)
-      .agg(
-        sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
-        sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
-        sum(when(col("trade_type") === "IN", 1L).otherwise(0L)).as("trans_in_count"),
-        sum(when(col("trade_type") === "OUT", 1L).otherwise(0L)).as("trans_out_count"),
-        (sumIf(col("trade_type") === "OUT", col("before_value"))
-          - sumIf(col("trade_type") === "OUT", col("after_value"))
-          - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
-      .withColumn("summary_date", graft.ops.Cols.yyyymmdd(col("start_time")))
-      .withColumn("hours", hour(col("start_time")))
-      .withColumn("mins", minute(col("start_time")))
-  }
+  def fiveMinRange(valueLog: DataFrame, gte: String, lt: String): DataFrame =
+    aggregate(valueLog.filter(inWindow(col("trade_time"), gte, lt)),
+      graft.time.Slicer.floorTo(col("trade_time").cast("timestamp"), "5min"))
 
   /** A4: one rollup step — re-aggregate the previous tier for one slice.
     * 1h consumes 5min rows of its hour; 1d consumes 1h rows of its day;
     * 1m consumes 1d rows of its month. */
-  private def rollup(prev: DataFrame, slice: TaskSlice, sliceFilter: Column,
-      stamp: DataFrame => DataFrame): DataFrame = {
-    val rolled = prev
-      .filter(sliceFilter)
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
+  private def rollup(prev: DataFrame, slice: TaskSlice, cut: TierCut): DataFrame =
+    cut.stamp(prev
+      .filter(cut.rows)
+      .filter(slice.scope)
       .groupBy(keys.map(col): _*)
       .agg(sum(col(metricSums.head)).as(metricSums.head),
-        metricSums.tail.map(c => sum(col(c)).as(c)): _*)
-    stamp(rolled)
-  }
+        metricSums.tail.map(c => sum(col(c)).as(c)): _*))
 
-  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val dateInt = g.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-    rollup(fiveMinTier, slice,
-      col("summary_date") === dateInt && col("hours") === g.getHour,
-      _.withColumn("summary_date", lit(dateInt))
-        .withColumn("hours", lit(g.getHour))
-        .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp")))
-  }
+  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice): DataFrame =
+    rollup(fiveMinTier, slice, slice.hourCut)
 
-  def oneDay(oneHourTier: DataFrame, slice: TaskSlice): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val dateInt = g.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-    rollup(oneHourTier, slice,
-      col("summary_date") === dateInt,
-      _.withColumn("summary_date", lit(dateInt))
-        .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp")))
-  }
+  def oneDay(oneHourTier: DataFrame, slice: TaskSlice): DataFrame =
+    rollup(oneHourTier, slice, slice.dayCut)
 
   /** 1m groups days whose yyyymmdd falls inside the month (trans_summary_1m
     * reads the 1d tier for summary_date in [month_start, next_month)). */
-  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val monthInt = g.getYear * 100 + g.getMonthValue
-    rollup(oneDayTier, slice,
-      col("summary_date") >= monthInt * 100 && col("summary_date") < (monthInt + 1) * 100,
-      _.withColumn("summary_month", lit(monthInt))
-        .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp")))
-  }
+  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice): DataFrame =
+    rollup(oneDayTier, slice, slice.monthCut)
 }

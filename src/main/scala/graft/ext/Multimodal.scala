@@ -11,11 +11,11 @@ import org.apache.spark.sql.types._
   * The Spark-side plumbing is real — schemas, partition-friendly batch
   * processing via mapPartitions (the JVM analogue of mapInPandas: one
   * iterator per partition, amortized per-batch setup), typed stage
-  * signatures, deterministic outputs. The actual codecs are STUBBED behind
-  * [[MediaCodec]] (this environment ships no image/audio libraries): the
-  * default [[FakeCodec]] derives deterministic pseudo-features from the
-  * bytes so every downstream stage is testable end-to-end. Swapping in a
-  * real codec is a one-line change at the call site and touches no plumbing.
+  * signatures, deterministic outputs. The actual codec is STUBBED (no
+  * image/audio library ships with the engine): `FakeCodec` derives
+  * deterministic pseudo-features from the bytes so every downstream stage is
+  * testable end-to-end. A real codec replaces `FakeCodec`'s four methods and
+  * touches no plumbing.
   *
   * Scale notes: payloads stay opaque binary until the decode stage runs
   * inside mapPartitions — no driver collection, no shuffle of payload bytes
@@ -34,32 +34,19 @@ object Multimodal {
     StructField("feature_dim", IntegerType, nullable = false),
     StructField("decode_ok", BooleanType, nullable = false)))
 
-  /** The codec seam. A real implementation would wrap e.g. a JNI imaging
-    * library; the pipeline code is codec-agnostic. */
-  trait MediaCodec extends Serializable {
-    /** bytes -> fixed-dim feature vector, or None when undecodable. */
-    def decode(kind: String, payload: Array[Byte], dim: Int): Option[Array[Float]]
-    /** image resize: returns re-encoded bytes (stub: identity-sized slice). */
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte]
-    /** video frame sampling: n evenly-spaced pseudo-frames. */
-    def sampleFrames(payload: Array[Byte], n: Int): Seq[Array[Byte]]
-    /** audio segmentation: split into n contiguous chunks covering the
-      * payload exactly (stub: proportional byte ranges standing in for
-      * sample-accurate cuts). */
-    def segment(payload: Array[Byte], n: Int): Seq[Array[Byte]]
-  }
-
-  /** Deterministic stand-in codec: features are seeded by a rolling hash of
-    * the payload so identical bytes always produce identical features —
-    * making dedup/similarity over media testable without real decoders. */
-  object FakeCodec extends MediaCodec {
+  /** Deterministic stand-in codec, the stages' implementation: features are
+    * seeded by a rolling hash of the payload so identical bytes always
+    * produce identical features — making dedup/similarity over media
+    * testable without real decoders. */
+  private object FakeCodec {
     private def rollingHash(bytes: Array[Byte]): Long = {
       var h = 1125899906842597L
       var i = 0
       while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
       h
     }
-    override def decode(kind: String, payload: Array[Byte], dim: Int): Option[Array[Float]] = {
+    /** bytes -> fixed-dim feature vector, or None when undecodable. */
+    def decode(kind: String, payload: Array[Byte], dim: Int): Option[Array[Float]] = {
       if (payload == null || payload.isEmpty) return None
       val seed = rollingHash(bytes = payload)
       val out = new Array[Float](dim)
@@ -73,17 +60,21 @@ object Multimodal {
       }
       Some(out)
     }
-    override def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
+    /** image resize: a content-bounded prefix standing in for re-encoded bytes. */
+    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] =
       if (payload == null) Array.emptyByteArray
       else payload.take(math.max(16, math.min(payload.length, w * h / 64)))
-    override def sampleFrames(payload: Array[Byte], n: Int): Seq[Array[Byte]] = {
+    /** video frame sampling: n evenly-spaced pseudo-frames. */
+    def sampleFrames(payload: Array[Byte], n: Int): Seq[Array[Byte]] = {
       if (payload == null || payload.isEmpty || n <= 0) return Seq.empty
       val stride = math.max(1, payload.length / n)
       (0 until math.min(n, payload.length)).map { i =>
         payload.slice(i * stride, math.min(i * stride + stride, payload.length))
       }
     }
-    override def segment(payload: Array[Byte], n: Int): Seq[Array[Byte]] = {
+    /** audio segmentation: n contiguous chunks covering the payload exactly
+      * (proportional byte ranges standing in for sample-accurate cuts). */
+    def segment(payload: Array[Byte], n: Int): Seq[Array[Byte]] = {
       if (payload == null || payload.isEmpty || n <= 0) return Seq.empty
       val len = payload.length.toLong
       // contiguous cover: segment i is [len*i/n, len*(i+1)/n) — boundaries by
@@ -96,8 +87,7 @@ object Multimodal {
 
   /** Decode stage: batch feature extraction inside mapPartitions (payloads
     * never leave the executor; per-partition codec setup happens once). */
-  def decodeFeatures(media: DataFrame, dim: Int = 64,
-      codec: MediaCodec = FakeCodec): DataFrame = {
+  def decodeFeatures(media: DataFrame, dim: Int = 64): DataFrame = {
     val spark = media.sparkSession
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(featureSchema)
     media
@@ -109,7 +99,7 @@ object Multimodal {
           val id = r.getLong(0)
           val kind = r.getString(1)
           val payload = if (r.isNullAt(2)) null else r.getAs[Array[Byte]](2)
-          codec.decode(kind, payload, dim) match {
+          FakeCodec.decode(kind, payload, dim) match {
             case Some(f) => Row(id, kind, f.toSeq, dim, true)
             case None    => Row(id, kind, Seq.empty[Float], dim, false)
           }
@@ -128,9 +118,8 @@ object Multimodal {
         sum(coalesce(col("duration_ms"), lit(0L))).as("total_duration_ms"))
 
   /** Resize stage for images (stub codec; real plumbing). */
-  def resizeImages(media: DataFrame, w: Int, h: Int,
-      codec: MediaCodec = FakeCodec): DataFrame = {
-    val resize = udf((payload: Array[Byte]) => codec.resize(payload, w, h))
+  def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = {
+    val resize = udf((payload: Array[Byte]) => FakeCodec.resize(payload, w, h))
     media.filter(col("kind") === "image")
       .withColumn("payload", resize(col("payload")))
       .withColumn("width", lit(w))
@@ -138,9 +127,8 @@ object Multimodal {
   }
 
   /** Frame sampling for videos: one row per sampled frame. */
-  def sampleVideoFrames(media: DataFrame, n: Int,
-      codec: MediaCodec = FakeCodec): DataFrame = {
-    val sample = udf((payload: Array[Byte]) => codec.sampleFrames(payload, n))
+  def sampleVideoFrames(media: DataFrame, n: Int): DataFrame = {
+    val sample = udf((payload: Array[Byte]) => FakeCodec.sampleFrames(payload, n))
     media.filter(col("kind") === "video")
       .withColumn("frame", explode(sample(col("payload"))))
       .select(col("media_id"), lit("image").as("kind"), col("frame").as("payload"),
@@ -152,12 +140,12 @@ object Multimodal {
     * model-sized clips). Segment count = ceil(duration / segMs); the stub
     * codec cuts proportional byte ranges where a real codec would cut at
     * sample boundaries. One row per segment with its time window stamped. */
-  def segmentAudio(media: DataFrame, segMs: Long, codec: MediaCodec = FakeCodec): DataFrame = {
+  def segmentAudio(media: DataFrame, segMs: Long): DataFrame = {
     require(segMs > 0, "segMs must be positive")
     val cut = udf((payload: Array[Byte], durationMs: java.lang.Long) => {
       val dur = if (durationMs == null) 0L else durationMs.longValue
       val n = math.max(1L, (dur + segMs - 1) / segMs).toInt
-      codec.segment(payload, n).zipWithIndex.map { case (b, i) => (i, b) }
+      FakeCodec.segment(payload, n).zipWithIndex.map { case (b, i) => (i, b) }
     })
     // A row with no duration metadata but a non-empty payload must not emit
     // an empty [0, 0) window over real bytes: fall back to a duration derived

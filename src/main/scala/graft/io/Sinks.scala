@@ -147,7 +147,7 @@ object Sinks {
 
   /** Asks the path's Hadoop filesystem. Reading a missing path fails too, but
     * only after Spark logs the listing's FileNotFoundException. */
-  private def exists(spark: SparkSession, path: String): Boolean = {
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }

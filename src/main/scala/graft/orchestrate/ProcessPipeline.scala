@@ -53,37 +53,6 @@ object ProcessPipeline {
       System.err.println(formatAlert(title, e))
   }
 
-  /** Concrete durable transport: append one alert payload per failure to a
-    * local file — the zero-egress completion of the ErrorHandler.py:22-31
-    * seam (the reference pushes the same payload to Telegram; a deployment
-    * with egress wraps its HTTP client in a [[Notifier]] the same way).
-    * Append is O_APPEND atomic per write, so concurrent pipelines interleave
-    * whole alerts, never torn ones. */
-  class FileNotifier(path: String) extends Notifier {
-    override def send(title: String, e: PipelineError): Unit = {
-      val p = java.nio.file.Paths.get(path)
-      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p, formatAlert(title, e).getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-  }
-
-  /** The reference's hourly heartbeat (task-producer/main.py:96-122) as a
-    * scheduler-agnostic hook: call once per cycle; emits at most one beat
-    * per `intervalMinutes`. Returns true when a beat fired (testable). */
-  class Heartbeat(title: String, intervalMinutes: Long = 60,
-      send: String => Unit = msg => System.err.println(msg)) {
-    private var lastBeat = 0L
-    def tick(nowMillis: Long): Boolean = {
-      if (nowMillis - lastBeat >= intervalMinutes * 60000L) {
-        lastBeat = nowMillis
-        send(s"$title alive at " + new java.sql.Timestamp(nowMillis))
-        true
-      } else false
-    }
-  }
-
   /** Run the steps in order with per-step retry; on exhaustion, persist the
     * error to `errorLogPath` (append) + notify, and halt — mirroring the
     * reference's break-on-failure semantics. Returns the last step output on

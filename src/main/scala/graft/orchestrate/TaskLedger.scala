@@ -1,6 +1,6 @@
 package graft.orchestrate
 
-import graft.ops.Cols._
+import graft.etl.TaskSlice
 import graft.time.Slicer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -50,7 +50,7 @@ object TaskLedger {
     * raw now for 5min — the slicer only emits whole slices anyway), then
     * explode into publishable slices. `now` is injected (SURVEY §7.4.4). */
   def newTasks(watermarks: DataFrame, now: java.sql.Timestamp): DataFrame = {
-    val nowLit = lit(now.toLocalDateTime.toString.replace('T', ' ')).cast("timestamp")
+    val nowLit = TaskSlice.stamp(now)
     val ranged = watermarks
       .withColumn("gte_time", col("lt_time"))
       .withColumn("lt_time",
@@ -150,7 +150,7 @@ object TaskLedger {
   /** S9 set-based status update: mark the given slices done with runtime
     * accounting (ExecUtils.py:56-84's per-row UPDATE loop as one join). */
   def markDone(board: DataFrame, completed: DataFrame, now: java.sql.Timestamp): DataFrame = {
-    val nowLit = lit(now.toLocalDateTime.toString.replace('T', ' ')).cast("timestamp")
+    val nowLit = TaskSlice.stamp(now)
     val hit = completed
       .select(taskKeys.map(col) :+ col("freq_type") :+ col("gte_time") :+ col("lt_time"): _*)
       .withColumn("_hit", lit(1))

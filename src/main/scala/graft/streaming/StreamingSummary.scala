@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.etl.TransSummary
 import graft.ops.Cols._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -26,7 +27,9 @@ object StreamingSummary {
   /** The trans_summary 5-min tier as a streaming aggregation. Input: a
     * STREAMING DataFrame shaped like player_value_log. Event time is
     * trade_time; late rows beyond the watermark are dropped (the batch
-    * system's equivalent is the manual rerun cascade). */
+    * system's equivalent is the manual rerun cascade). The window() grouping
+    * stays here, where the watermark needs it; the aggregates are the batch
+    * tier's A1 battery. */
   def transFiveMinStream(valueLog: DataFrame, watermark: String = "10 minutes"): DataFrame =
     valueLog
       .filter(col("trade_status") === "SUCCESS")
@@ -34,17 +37,9 @@ object StreamingSummary {
       // empty watermark = the caller already declared one upstream (e.g. a
       // dedup stage); redefining it on the same column is disallowed
       .transform(d => if (watermark.isEmpty) d else d.withWatermark("trade_time", watermark))
-      .groupBy(
-        window(col("trade_time"), "5 minutes").as("slice"),
-        col("platform"), col("site_code"), col("player_name"), col("country"))
-      .agg(
-        sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
-        sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
-        countIf(col("trade_type") === "IN").as("trans_in_count"),
-        countIf(col("trade_type") === "OUT").as("trans_out_count"),
-        (sumIf(col("trade_type") === "OUT", col("before_value"))
-          - sumIf(col("trade_type") === "OUT", col("after_value"))
-          - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
+      .groupBy((window(col("trade_time"), "5 minutes").as("slice") +:
+        TransSummary.keys.map(col)): _*)
+      .agg(TransSummary.battery.head, TransSummary.battery.tail: _*)
       .select(
         col("slice.start").as("start_time"),
         yyyymmdd(col("slice.start")).as("summary_date"),

@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guard against library code that nothing runs. Every public top-level name
   * in `src/main/scala` (a top-level object, class or trait, and each public
-  * def/val/object member of one) must be referenced somewhere in `src/main`
-  * outside its own definition, or in `perfbench/src`, or carry a reasoned
-  * line in `tools/test_only_api.txt`. Specs do not count as callers: code
+  * def/val/var/object/class/trait member of one) must be referenced
+  * somewhere in `src/main` outside its own definition, or in
+  * `perfbench/src`, or carry a reasoned line in `tools/test_only_api.txt`. Specs do not count as callers: code
   * that only its own spec calls is either deleted or ledgered with the
   * reason it stays (a reference implementation a spec compares against, an
   * SQL entry point, a `runMain` tool).
@@ -83,7 +83,7 @@ class UncalledApiSpec extends AnyFunSuite {
   private val Modifiers = "(?:(?:final|implicit|override|lazy|case|sealed|abstract)\\s+)*"
   private val TopLevel =
     s"^((?:private|protected)\\S*\\s+)?$Modifiers(object|class|trait)\\s+([A-Za-z_][A-Za-z0-9_]*).*".r
-  private val Member = s"^  $Modifiers(def|val|var|object)\\s+([A-Za-z_][A-Za-z0-9_]*).*".r
+  private val Member = s"^  $Modifiers(def|val|var|object|class|trait)\\s+([A-Za-z_][A-Za-z0-9_]*).*".r
 
   private def indent(l: String): Int = l.length - l.dropWhile(_ == ' ').length
 

@@ -1,7 +1,8 @@
 package graft.io
 
 import graft.SparkTestSession
-import graft.etl.{TaskSlice, TestData, TransSummary}
+import graft.etl.{PlayerSummary, TaskSlice, TestData, TransSummary}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,20 +15,26 @@ class SinksSpec extends AnyFunSuite {
   lazy val vlog = TestData.valueLog(spark).cache()
 
   test("fiveMinRange (one-pass backfill) equals per-slice fiveMin execution") {
-    val range = TransSummary.fiveMinRange(vlog, "2024-01-02 00:00:00", "2024-01-02 02:00:00")
-    val slices = (0 until 24).map { i =>
+    def perSlice(run: TaskSlice => DataFrame): DataFrame = (0 until 24).map { i =>
       val g = java.time.LocalDateTime.of(2024, 1, 2, i / 12, (i % 12) * 5)
-      TransSummary.fiveMin(vlog, TaskSlice(freq_type = "5min",
+      run(TaskSlice(freq_type = "5min",
         gte_time = java.sql.Timestamp.valueOf(g),
         lt_time = java.sql.Timestamp.valueOf(g.plusMinutes(5))))
     }.reduce(_ unionByName _)
-    val keys = Seq("platform", "site_code", "player_name", "country", "summary_date", "hours", "mins")
-    val joined = range.alias("r").join(slices.alias("s"), keys, "full_outer")
-      .filter(
-        abs(coalesce(col("r.trans_in_amount"), lit(0.0)) - coalesce(col("s.trans_in_amount"), lit(0.0))) > 1e-9 ||
-        coalesce(col("r.trans_in_count"), lit(-1L)) =!= coalesce(col("s.trans_in_count"), lit(-1L)))
-    assert(joined.isEmpty, "backfill path diverged from per-slice path")
-    assert(range.count() === slices.count())
+    val (gte, lt) = ("2024-01-02 00:00:00", "2024-01-02 02:00:00")
+    val plog = TestData.profitLog(spark)
+    val sites = TestData.gameSites(spark)
+    Seq(
+      "trans" -> (TransSummary.fiveMinRange(vlog, gte, lt), perSlice(TransSummary.fiveMin(vlog, _))),
+      "player" -> (PlayerSummary.fiveMinRange(plog, sites, gte, lt),
+        perSlice(PlayerSummary.fiveMin(plog, sites, _)))
+    ).foreach { case (cascade, (range, slices)) =>
+      // every column, bitwise, in both directions (multiset difference)
+      val sliced = slices.select(range.columns.toSeq.map(col): _*)
+      assert(range.count() > 0, s"$cascade: no rows in the window")
+      assert(range.exceptAll(sliced).isEmpty && sliced.exceptAll(range).isEmpty,
+        s"$cascade backfill path diverged from per-slice path")
+    }
   }
 
   test("dynamic partition overwrite: re-running a slice is idempotent and " +

@@ -19,10 +19,10 @@ class ProcessPipelineSpec extends AnyFunSuite {
 
   test("a failing step retries, records the error, notifies, and halts") {
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val notified = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sent = scala.collection.mutable.ArrayBuffer.empty[String]
     val errPath = java.nio.file.Files.createTempDirectory("graft_err").toString + "/error_log"
     val notifier = new Notifier {
-      override def send(title: String, e: PipelineError): Unit = notified.incrementAndGet()
+      override def send(title: String, e: PipelineError): Unit = sent += formatAlert(title, e)
     }
     val result = ProcessPipeline.run(spark, "producer", Seq(
       step("scan") { (_, s) => Some(s.range(3).toDF("id")) },
@@ -33,51 +33,19 @@ class ProcessPipelineSpec extends AnyFunSuite {
 
     assert(result.isLeft)
     assert(attempts.get() === 3, "step must retry `tries` times")
-    assert(notified.get() === 1)
+    assert(sent.size === 1)
+    // the exact field block the reference's transport sends (TGMessage.py)
+    val payload = sent.head
+    assert(payload.startsWith("***** producer Error *****\n"))
+    assert(payload.contains("pipeline: producer\n"))
+    assert(payload.contains("process: boom\n"))
+    assert(payload.contains("content: java.lang.RuntimeException: db down"))
+    assert(payload.contains("time: 2024-01-01 00:00:00"))
     val log = spark.read.parquet(errPath)
     assert(log.count() === 1)
     val row = log.head
     assert(row.getAs[String]("process") === "boom")
     assert(row.getAs[String]("content").contains("db down"))
-  }
-
-  test("file notifier appends the reference-shaped alert payload and the pipeline halts") {
-    val alertFile = java.nio.file.Files.createTempDirectory("graft_alerts")
-      .resolve("alerts.log").toString
-    val result = ProcessPipeline.run(spark, "trans_summary", Seq(
-      step("ReadSlice") { (_, s) => Some(s.range(3).toDF("id")) },
-      step("WriteSlice") { (_, _) => sys.error("connection refused") }),
-      notifier = new FileNotifier(alertFile), tries = 2, delayMs = 1,
-      clock = () => java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-    assert(result.isLeft)
-    val payload = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(alertFile)), "UTF-8")
-    // the exact field block the reference's transport sends (TGMessage.py)
-    assert(payload.startsWith("***** trans_summary Error *****\n"))
-    assert(payload.contains("pipeline: trans_summary\n"))
-    assert(payload.contains("process: WriteSlice\n"))
-    assert(payload.contains("content: java.lang.RuntimeException: connection refused"))
-    assert(payload.contains("time: 2024-01-01 00:00:00"))
-    // a second failure APPENDS (the error ledger semantics), never truncates
-    ProcessPipeline.run(spark, "trans_summary", Seq(
-      step("WriteSlice") { (_, _) => sys.error("still down") }),
-      notifier = new FileNotifier(alertFile), tries = 1, delayMs = 1,
-      clock = () => java.sql.Timestamp.valueOf("2024-01-01 00:05:00"))
-    val twice = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(alertFile)), "UTF-8")
-    // each alert header carries two 5-star runs -> 2 alerts = 4 runs
-    assert("\\*{5}".r.findAllIn(twice).size === 4,
-      "two alerts must both be present")
-  }
-
-  test("heartbeat fires at most once per interval") {
-    val beats = scala.collection.mutable.ArrayBuffer.empty[String]
-    val hb = new Heartbeat("producer", intervalMinutes = 60, send = beats += _)
-    val base = 1700000000000L
-    assert(hb.tick(base))                       // first tick fires
-    assert(!hb.tick(base + 30 * 60000L))        // 30 min later: silent
-    assert(hb.tick(base + 61 * 60000L))         // past the hour: fires
-    assert(beats.size === 2)
   }
 
   test("dep gate bypass: 5min and pass-listed assignees flow through matched") {
