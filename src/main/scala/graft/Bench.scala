@@ -1,52 +1,111 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — one JSON line with per-query wall times.
   *
-  * Two passes over the query set: an untimed warm-up (JIT, codegen cache,
-  * parquet footer cache, broadcast warm) and a timed pass in sorted name
-  * order. Without the warm-up the first query absorbs ~10 s of JVM/session
-  * startup and the numbers are noise.
+  * An untimed warm-up pass (JIT, codegen cache, parquet footer cache,
+  * broadcast warm), then `Passes` timed passes over the query set in sorted
+  * name order. Without the warm-up the first query absorbs ~10 s of
+  * JVM/session startup and the numbers are noise.
   *
-  * Cross-ROUND outliers get adjudicated in a FRESH JVM: a query whose
-  * min-of-passes exceeds the previous artifact's time by >1.5x
-  * control-corrected is re-measured once in a child java process (same
-  * classpath/JVM args, SPARK_GRAFT_ONLY scoped to the outliers), and both
-  * numbers are recorded — "queries" stays the honest in-run min,
-  * "adjudicated" carries the isolated re-measure. Round 7 showed why:
-  * three phantom 2.2-2.6x regressions (x67/x68/x69) were pure same-JVM
-  * interference (GC/JIT debris from 200 earlier queries) that isolated
-  * re-runs disproved, at the cost of a manual investigation. */
+  * Each query is timed on its output: building the DataFrame (which includes
+  * any eager staging, pins, collects and the whole run of a streaming drain)
+  * is timed apart from materializing it with a `noop` write, which executes
+  * the full plan and stores nothing. A `count()` would let Catalyst prune
+  * every column it does not need, and with them joins, windows and
+  * generators. Per query the line carries the median build, action and total
+  * over the passes and the min–max of the total; with this few samples a
+  * tail percentile would be no tail, so none is reported.
+  */
 object Bench {
 
-  /** Parse the flat `"name":1.234` map inside `"queries":{...}` plus
-    * `"control_sec":N` from a previous bench artifact (machine-written by
-    * this object — regex over the known shape, not general JSON). */
-  private[graft] def parsePrev(txt: String): Option[(Map[String, Double], Double)] = {
-    def obj(key: String): Map[String, Double] =
-      ("\"" + key + """":\{([^}]*)\}""").r.findFirstMatchIn(txt).map { m =>
-        """"([a-z0-9_]+)":(-?[0-9.]+)""".r.findAllMatchIn(m.group(1))
-          .map(g => g.group(1) -> g.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-    val cm = """"control_sec":([0-9.+-]+)""".r.findFirstMatchIn(txt)
-    val qs = obj("queries")
-    if (qs.isEmpty || cm.isEmpty) None
-    else {
-      // a recorded adjudication is the truer prior: min-merge it so a real
-      // regression can't hide behind last round's interference artifact
-      val adj = obj("adjudicated") - "_control"
-      val merged = qs.map { case (k, v) =>
-        k -> adj.get(k).filter(_ >= 0).fold(v)(a => if (v >= 0) math.min(v, a) else a)
+  /** Timed passes per query; every figure is a median over them. */
+  val Passes = 3
+
+  /** One query's medians over the timed passes, in seconds, and the
+    * min–max of its per-pass totals. */
+  private[graft] final case class Timing(build: Double, action: Double, total: Double,
+      min: Double, max: Double)
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  /** Build `df` and materialize it with a noop write: (build s, action s). */
+  private def timeOnce(df: => DataFrame): (Double, Double) = {
+    val t0 = System.nanoTime()
+    val built = df
+    val t1 = System.nanoTime()
+    built.write.format("noop").mode("overwrite").save()
+    ((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
+  }
+
+  /** The warm-up pass, then `Passes` timed passes of every query in order.
+    * A query that throws in a timed pass is `None` — a broken query must
+    * never masquerade as a fast one — and is not run again. */
+  private[graft] def measure(spark: SparkSession,
+      queries: Seq[(String, SparkSession => DataFrame)]): Seq[(String, Option[Timing])] = {
+    queries.foreach { case (_, q) =>
+      try timeOnce(q(spark)) catch { case _: Throwable => () }
+    }
+    val samples = queries.map(_._1 -> Seq.newBuilder[(Double, Double)]).toMap
+    val failed = scala.collection.mutable.Set[String]()
+    (1 to Passes).foreach { _ =>
+      queries.filterNot(q => failed(q._1)).foreach { case (name, q) =>
+        try samples(name) += timeOnce(q(spark))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+        }
       }
-      Some((merged, cm.get.group(1).toDouble))
+    }
+    queries.map { case (name, _) =>
+      val s = samples(name).result()
+      val totals = s.map { case (b, a) => b + a }
+      name -> Option.when(!failed(name))(
+        Timing(median(s.map(_._1)), median(s.map(_._2)), median(totals), totals.min, totals.max))
     }
   }
+
+  // 3 decimals (ms resolution): the full double repr made the line ~1 KB
+  // longer than a tail-bounded capture window, which then cut the HEAD of
+  // the line. Wall-clock noise is >1 ms anyway.
+  private def fmt(v: Double): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** The JSON line: headline keys, `queries` holding each query's median
+    * total (-1 for a failed one), then the build/action medians and the
+    * total's min–max of the queries that succeeded. */
+  private[graft] def report(results: Seq[(String, Option[Timing])], controlSec: Double,
+      artifact: String, sfDir: String): String = {
+    def obj(f: Timing => String): String = results.collect { case (n, Some(t)) =>
+      "\"" + n + "\":" + f(t)
+    }.mkString("{", ",", "}")
+    val qs = results.map { case (n, t) => "\"" + n + "\":" + fmt(t.fold(-1.0)(_.total)) }
+      .mkString("{", ",", "}")
+    val failed = results.collect { case (n, None) => n }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = results.flatMap(_._2).map(_.total).sum
+    // headline keys are duplicated at the TAIL of the line: a bounded tail
+    // capture drops the HEAD of an over-long line (round 7's artifact lost
+    // "metric"/"value"/most of "queries" that way), so everything a
+    // round-over-round comparison needs to survive truncation — totals,
+    // control, failure count, the artifact path holding the full line —
+    // sits after the big maps
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
+      s""""build_sec":${obj(t => fmt(t.build))},"action_sec":${obj(t => fmt(t.action))},""" +
+      s""""spread_sec":${obj(t => s"[${fmt(t.min)},${fmt(t.max)}]")},"failed":$failedJson,""" +
+      s""""action":"noop","passes":$Passes,"control_sec":${fmt(controlSec)},""" +
+      s""""total_sec":${fmt(total)},"n_queries":${results.size},"n_failed":${failed.size},""" +
+      s""""artifact":"$artifact","sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = Sessions.local(cpus.toInt, "graft-bench")
+    val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_last.json")
+    val spark = Sessions.local(Sessions.cpus, "graft-bench")
 
     // name fixture drift up front (warn, don't abort — unaffected queries
     // should still record; the failed list carries the blast radius)
@@ -55,166 +114,37 @@ object Bench {
 
     // SPARK_GRAFT_ONLY=q1_x,q2_y runs a subset (hotspot iteration)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val registered = SparkEntry.queries
+    val names = registered.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // warm-up pass (untimed)
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
-    // two timed passes; report the min per query (noise on a shared host is
-    // one-sided — a slow pass means interference, never a faster engine).
-    // A query that throws is reported as -1 and listed in "failed" — a broken
-    // query must never masquerade as a fast one.
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def timeOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          failed += name
-          false
-        }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
-    def timedPass(ns: Seq[String]): Map[String, Double] =
-      ns.map(n => n -> timeOne(n)).toMap
-    // the control is data-independent pure CPU (no IO, no shuffle skew):
-    // its ratio across boots is the host-noise factor a cross-round
-    // comparison should divide out before blaming a plan change
-    def control(): Double = {
-      val t0 = System.nanoTime()
-      // per-term mod keeps every partial sum under 2e8 * 1e9 = 2e17 << 2^63
-      // (ANSI mode makes a long-overflowing sum a task failure, not a wrap)
-      spark.range(200L * 1000 * 1000)
-        .selectExpr("sum((id * 2654435761) % 1000000007)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val c1 = control()
-    val (p1, p2) = (timedPass(names), timedPass(names))
-    val c2 = control()
-    // tie-break pass: a host stall can span one whole pass, leaving both
-    // measurements of a query slow-and-disagreeing. Re-measure any query
-    // whose two passes differ by >1.5x (and >0.25 s absolute) so a one-boot
-    // stall can't masquerade as a plan regression in the recorded artifact.
-    val unstable = names.filter { n =>
-      !failed.contains(n) && {
-        val (a, b) = (p1(n), p2(n))
-        math.max(a, b) > 1.5 * math.min(a, b) && math.max(a, b) - math.min(a, b) > 0.25
-      }
-    }
-    if (unstable.nonEmpty)
-      System.err.println(s"[bench] tie-break pass for: ${unstable.mkString(",")}")
-    val p3 = timedPass(unstable)
-    val c3 = control()
-    // a query is healthy only if ALL its passes succeeded
-    val results = names.map { n =>
-      n -> (if (failed.contains(n)) -1.0
-            else math.min(math.min(p1(n), p2(n)), p3.getOrElse(n, Double.MaxValue)))
-    }
-    val controlSec = Seq(c1, c2, c3).sorted.apply(1) // median of three probes
-    // --- cross-round outlier adjudication (fresh-JVM re-measure) ---------
-    val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_last.json")
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", artifact)
-    val prev: Option[(Map[String, Double], Double)] =
-      if (sys.env.contains("SPARK_GRAFT_NO_ADJ")) None
-      else try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(prevPath)), "UTF-8")
-        // only adjudicate against a same-SF artifact
-        if (s""""sf":"$sfDir"""".r.findFirstIn(txt).isDefined) parsePrev(txt) else None
-      } catch { case _: Throwable => None }
-    val outliers = prev.toSeq.flatMap { case (pq, pc) =>
-      val noise = if (pc > 0) controlSec / pc else 1.0
-      results.filter { case (n, cur) =>
-        pq.get(n).exists(p => p > 0 && cur >= 0 &&
-          cur > 1.5 * p * noise && cur - p * noise > 0.25)
-      }.map(_._1)
-    }
-    // >20 outliers means a global change (new JVM flags, data regen), not
-    // interference — adjudication would just re-run the bench; skip it
-    val adjudicated: Map[String, Double] =
-      if (outliers.isEmpty || outliers.size > 20) Map.empty
-      else {
-        System.err.println(s"[bench] fresh-JVM adjudication for: ${outliers.mkString(",")}")
-        try {
-          val out = java.nio.file.Files.createTempFile("graft_adj", ".json")
-          val jvm = System.getProperty("java.home") + "/bin/java"
-          val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-          import scala.jdk.CollectionConverters._
-          val cmd = (Seq(jvm) ++ rt.getInputArguments.asScala.filterNot(_.startsWith("-agentlib"))
-            ++ Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")).asJava
-          val pb = new ProcessBuilder(cmd)
-          pb.environment().put("SPARK_GRAFT_ONLY", outliers.mkString(","))
-          pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
-          pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-          pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-          pb.environment().put("SPARK_GRAFT_NO_ADJ", "1")
-          pb.redirectErrorStream(true)
-          pb.redirectOutput(ProcessBuilder.Redirect.to(new java.io.File("/dev/null")))
-          val p = pb.start()
-          val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
-          if (!done) { p.destroyForcibly(); Map.empty[String, Double] }
-          else {
-            val childTxt = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-            java.nio.file.Files.deleteIfExists(out)
-            parsePrev(childTxt) match {
-              case Some((cq, cc)) =>
-                cq.filter(_._2 >= 0) + ("_control" -> cc)
-              case None => Map.empty[String, Double]
-            }
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] adjudication failed: ${e.getMessage}")
-          Map.empty[String, Double]
-        }
-      }
-    // 3 decimals (ms resolution): full double repr made the line ~1 KB
-    // longer than a tail-bounded capture window and the HEAD of the line —
-    // "metric"/"value" and the first queries — was what got cut (r3's
-    // recorded artifact had parsed:null). Wall-clock noise is >1 ms anyway.
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.filter(_._2 >= 0).map(_._2).sum
-    // the honest headline: same-JVM interference only ever inflates a number,
-    // so where a fresh-JVM adjudication exists, the smaller of the two
-    // measurements is the truer one — fold it into a corrected total so a
-    // consumer of the headline never has to re-derive it from the side map
-    val adjTotal = results.filter(_._2 >= 0).map { case (n, v) =>
-      adjudicated.get(n).filter(_ >= 0).fold(v)(math.min(_, v))
-    }.sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val adjJson =
-      if (adjudicated.isEmpty) ""
-      else adjudicated.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString(""","adjudicated":{""", ",", "}")
-    // headline keys are duplicated at the TAIL of the line: a bounded tail
-    // capture drops the HEAD of an over-long line (round 7's artifact lost
-    // "metric"/"value"/most of "queries" that way), so everything a
-    // round-over-round comparison needs to survive truncation — totals,
-    // control, failure count, the artifact path holding the full line —
-    // sits after the big maps
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson$adjJson,"control_sec":${fmt(controlSec)},"total_sec":${fmt(total)},"queries_adjudicated_total":${fmt(adjTotal)},"n_queries":${results.size},"n_failed":${failed.size},"artifact":"$artifact","sf":"$sfDir"}"""
+    // the control is data-independent pure CPU (no IO, no shuffle skew): its
+    // ratio across boots is the host-noise factor a cross-run comparison
+    // should divide out before blaming a plan change. It leads every pass.
+    // Per-term mod keeps every partial sum under 2e8 * 1e9 = 2e17 << 2^63
+    // (ANSI mode makes a long-overflowing sum a task failure, not a wrap).
+    val control: SparkSession => DataFrame =
+      _.range(200L * 1000 * 1000).selectExpr("sum((id * 2654435761) % 1000000007)")
+    val timed = measure(spark, ("_control" -> control) +:
+      names.map(n => n -> ((s: SparkSession) => registered(n)(s, sfDir))))
+    val controlSec = timed.head._2.fold(-1.0)(_.total)
+    val results = timed.tail
+    val line = report(results, controlSec, artifact, sfDir)
     // belt and braces: persist the full JSON as a file artifact too, so the
     // recorded number is self-contained even if a stdout capture truncates
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
+    val nFailed = results.count(_._2.isEmpty)
     // compact companion line FIRST (stderr, [bench]-prefixed so no JSON-line
     // parser can mistake it for the artifact): the human-readable summary a
     // bounded capture keeps even when the full line is cut mid-queries
-    System.err.println(s"[bench] summary total=${fmt(total)}s adjudicated_total=${fmt(adjTotal)}s " +
-      s"control=${fmt(controlSec)}s queries=${results.size} failed=${failed.size} artifact=$artifact")
+    System.err.println(s"[bench] summary total=${fmt(results.flatMap(_._2).map(_.total).sum)}s " +
+      s"control=${fmt(controlSec)}s queries=${results.size} failed=$nFailed artifact=$artifact")
     // stop BEFORE printing: the JSON line must be the last thing on the
     // merged stdout/stderr so a line-oriented parser can't trip over a
     // stop-time warning trailing it
     spark.stop()
     println(line)
-    if (failed.nonEmpty) sys.exit(1)
+    if (nFailed > 0) sys.exit(1)
   }
 }

@@ -26,6 +26,10 @@ object Sessions {
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
 
+  /** Executor threads for a `runMain` tool's local session:
+    * `SPARK_GRAFT_CPUS`, else one per core the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   /** Local session: n executor threads, UI off. */
   def local(n: Int, appName: String = "graft"): SparkSession = {
     val s = tuned(SparkSession.builder().master(s"local[$n]").appName(appName), n)

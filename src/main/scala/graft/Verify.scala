@@ -6,8 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus.toInt, "graft-verify")
+    val spark = Sessions.local(Sessions.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // name fixture drift up front (round 4 lost 35 queries to a silent
     // ts re-encoding); warn rather than abort so unaffected queries still run

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Dev tool: dump formatted physical plans for the harness queries so the
   * scan pushdown / join strategy / codegen coverage can be reviewed.
@@ -9,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = if (args.nonEmpty) args.toSet else graft.SparkEntry.queries.keySet
     graft.SparkEntry.queries.toSeq.sortBy(_._1)

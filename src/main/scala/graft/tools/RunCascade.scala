@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.etl.Pipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end smoke of the full report pipeline on the sf0.001 fixtures:
@@ -17,13 +16,7 @@ object RunCascade {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_cascade").toString)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus, "graft-cascade")
     spark.sparkContext.setLogLevel("ERROR")
 
     // fixture binding (FIXTURES.md §C): events -> reference-shaped logs

@@ -37,8 +37,7 @@ object RunCurate {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_curate").toString
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-curate")
+    val spark = Sessions.local(Sessions.cpus, "graft-curate")
 
     val raw = Tables.documents(spark, sfDir)
     val n0 = raw.count()

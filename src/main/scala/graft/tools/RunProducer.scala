@@ -18,7 +18,7 @@ object RunProducer {
     val outDir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_producer").toString)
     val board = s"$outDir/task_board"
-    val spark = Sessions.local(8, "graft-producer")
+    val spark = Sessions.local(Sessions.cpus, "graft-producer")
     spark.sparkContext.setLogLevel("ERROR")
     import ProcessPipeline._
 

@@ -47,8 +47,7 @@ object ScaleUp {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val hotPct = args.lift(3).map(_.toInt).getOrElse(0)
     require(hotPct >= 0 && hotPct <= 50, "hotPct must be in [0, 50]")
-    val spark = Sessions.local(
-      math.min(Runtime.getRuntime.availableProcessors, 32), "graft-scaleup")
+    val spark = Sessions.local(Sessions.cpus, "graft-scaleup")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

@@ -37,7 +37,7 @@ SPARK_GRAFT_ONLY="$QUERIES" SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-16g} \
 echo "== skew slope: hot vs uniform (boot-correct with the controls) =="
 run_bench() { # $1 = sf dir, $2 = artifact path
   SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_BENCH_OUT="$2" \
-  SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_NO_ADJ=1 \
+  SPARK_GRAFT_ONLY="$QUERIES" \
   SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-16g} \
     sbt -batch "runMain graft.Bench" >/dev/null 2>&1 || true
 }
