@@ -60,18 +60,18 @@ object Pipeline {
 
   /** Run one day of the player_summary cascade end-to-end. */
   def runPlayerDay(spark: SparkSession, profitLog: DataFrame, gameSites: DataFrame,
-      paths: Paths, day: java.time.LocalDate, cfg: RtpConfig = RtpConfig()): Unit = {
+      paths: Paths, day: java.time.LocalDate): Unit = {
     val (daySlice, hourSlices) = daySlices(day)
 
-    val fiveMin = PlayerSummary.fiveMinRange(profitLog, gameSites, daySlice.gte, daySlice.lt, cfg)
+    val fiveMin = PlayerSummary.fiveMinRange(profitLog, gameSites, daySlice.gte, daySlice.lt)
     Sinks.overwriteSlices(fiveMin, paths.player5min, Seq("summary_date"))
 
     val tier5 = spark.read.parquet(paths.player5min)
-    val oneHour = hourSlices.map(PlayerSummary.oneHour(tier5, _, cfg)).reduce(_ unionByName _)
+    val oneHour = hourSlices.map(PlayerSummary.oneHour(tier5, _)).reduce(_ unionByName _)
     Sinks.overwriteSlices(oneHour, paths.player1h, Seq("summary_date"))
 
     val tier1h = spark.read.parquet(paths.player1h)
-    Sinks.overwriteSlices(PlayerSummary.oneDay(tier1h, daySlice, cfg), paths.player1d, Seq("summary_date"))
+    Sinks.overwriteSlices(PlayerSummary.oneDay(tier1h, daySlice), paths.player1d, Seq("summary_date"))
   }
 
   /** Monthly rollup for both cascades (consumes the materialized 1d tiers;

@@ -33,8 +33,7 @@ object PlayerSummary {
     * rounds grouped by key and `stamp` (the row's `start_time`), the ratio
     * enrichment, the int time keys derived from the stamp, and the risky
     * flag. */
-  private def aggregate(profitLog: DataFrame, gameSites: DataFrame, stamp: Column,
-      cfg: RtpConfig): DataFrame = {
+  private def aggregate(profitLog: DataFrame, gameSites: DataFrame, stamp: Column): DataFrame = {
     val agg = profitLog
       .filter(col("is_robot") === 0)
       .groupBy((keys.map(col) :+ stamp.as("start_time")): _*)
@@ -66,7 +65,7 @@ object PlayerSummary {
       .withColumn("hours", hour(col("start_time")))
       .withColumn("mins", minute(col("start_time")))
 
-    checkIfRisky(enriched, cfg)
+    checkIfRisky(enriched)
   }
 
   /** F7: profit split by the site's ratio (player_summary_5min.py:121-123). */
@@ -77,40 +76,31 @@ object PlayerSummary {
 
   /** A2+A3+F8 battery for one slice of player_profit_log, stamped with the
     * slice start: a slice longer than 5 minutes still gives one row per key. */
-  def fiveMin(profitLog: DataFrame, gameSites: DataFrame, slice: TaskSlice,
-      cfg: RtpConfig = RtpConfig()): DataFrame =
+  def fiveMin(profitLog: DataFrame, gameSites: DataFrame, slice: TaskSlice): DataFrame =
     TaskSlice.startAfterMins(aggregate(
       profitLog
         .filter(inWindow(col("round_time"), slice.gte, slice.lt))
         .filter(slice.gameScope),
-      gameSites, slice.startStamp, cfg))
+      gameSites, slice.startStamp))
 
   /** Backfill/catch-up path: ALL 5-min slices inside `[gte, lt)` in one
     * aggregation (cf. TransSummary.fiveMinRange) — slice stamps from the
     * floored round_time; identical to per-slice [[fiveMin]] for aligned
     * slices. */
-  def fiveMinRange(profitLog: DataFrame, gameSites: DataFrame, gte: String, lt: String,
-      cfg: RtpConfig = RtpConfig()): DataFrame =
+  def fiveMinRange(profitLog: DataFrame, gameSites: DataFrame, gte: String, lt: String): DataFrame =
     aggregate(profitLog.filter(inWindow(col("round_time"), gte, lt)), gameSites,
-      graft.time.Slicer.floorTo(col("round_time").cast("timestamp"), "5min"), cfg)
+      graft.time.Slicer.floorTo(col("round_time").cast("timestamp"), "5min"))
 
-  /** F1: ordered mask semantics (player_summary_5min.py:136-148) — base rule
-    * first, then the unconditional profit override. Encoded as a single
-    * `when` cascade with the LAST pandas mask as the FIRST branch (later
-    * masks win in pandas; first match wins in `when`). */
-  def checkIfRisky(report: DataFrame, cfg: RtpConfig = RtpConfig()): DataFrame =
+  /** F1: flag the report's rows with `RtpConfig.risky`. */
+  def checkIfRisky(report: DataFrame): DataFrame =
     report.withColumn("is_risky",
-      when(col("profit_amount") >= cfg.profitUnconditional, 1)
-        .when(col("profit_amount") >= cfg.profitThreshold &&
-          col("b_count") >= cfg.betCountThreshold &&
-          col("rtp") >= cfg.rtpThreshold, 1)
-        .otherwise(0))
+      RtpConfig.risky(col("profit_amount"), col("b_count"), col("rtp")))
 
   /** A4 rollup step shared by 1h/1d/1m: sum the presummed battery over the
     * slice's cut of the tier below, recompute rtp from the re-summed
     * profit/bet, carry ratio with first() (MariaDB non-strict GROUP BY made
     * deterministic), rebuild the profit split, stamp, flag. */
-  private def reAgg(prev: DataFrame, slice: TaskSlice, cut: TierCut, cfg: RtpConfig): DataFrame =
+  private def reAgg(prev: DataFrame, slice: TaskSlice, cut: TierCut): DataFrame =
     checkIfRisky(cut.stamp(prev
       .filter(cut.rows)
       .filter(slice.gameScope)
@@ -120,14 +110,14 @@ object PlayerSummary {
         sumCols.map(c => sum(col(c)).as(c)) :+
           first(col("ratio")).as("ratio"): _*)
       .withColumn("rtp", safeDiv(col("profit_amount"), col("b_amount")))
-      .transform(profitSplit)), cfg)
+      .transform(profitSplit)))
 
-  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame =
-    reAgg(fiveMinTier, slice, slice.hourCut, cfg)
+  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice): DataFrame =
+    reAgg(fiveMinTier, slice, slice.hourCut)
 
-  def oneDay(oneHourTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame =
-    reAgg(oneHourTier, slice, slice.dayCut, cfg)
+  def oneDay(oneHourTier: DataFrame, slice: TaskSlice): DataFrame =
+    reAgg(oneHourTier, slice, slice.dayCut)
 
-  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice, cfg: RtpConfig = RtpConfig()): DataFrame =
-    reAgg(oneDayTier, slice, slice.monthCut, cfg)
+  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice): DataFrame =
+    reAgg(oneDayTier, slice, slice.monthCut)
 }

@@ -82,14 +82,13 @@ object RiskCtrl {
   }
 
   /** The sigma/risk-score block (risk_ctrl_player_1d.py:160-236), as one
-    * codegen-friendly column cascade. `floors`/`rates`/`weights` default to
-    * the reference config. */
-  def sigma(meta: DataFrame, floors: SigmaFloors = SigmaFloors.player,
-      rates: CountryRates = CountryRates(), weights: RiskWeights = RiskWeights(),
-      hasTrans: Boolean = true): DataFrame = {
+    * codegen-friendly column cascade: `floors` is the report grain's
+    * (`SigmaFloors.player` or `.game`); rates and weights are the
+    * reference's constants. */
+  def sigma(meta: DataFrame, floors: SigmaFloors, hasTrans: Boolean = true): DataFrame = {
     // F9: country -> rate lookup; unmapped countries behave like pandas NaN
     // (every product with them nulls out, then the final fill(0) applies).
-    val rateMap = typedlit(rates.rates)
+    val rateMap = typedlit(CountryRates.rates)
     val rate = element_at(rateMap, col("country"))
 
     // Floor substitution. NOTE (reference parity, risk_ctrl_player_1d.py:193-202):
@@ -134,8 +133,8 @@ object RiskCtrl {
       }
 
     val scored = step2.withColumn("risk_score",
-      col("b_sigma") * weights.b + col("p_sigma") * weights.wl +
-        col("trans_sigma") * weights.trans + col("p_trans_multi") * weights.pTransMulti)
+      col("b_sigma") * RiskWeights.b + col("p_sigma") * RiskWeights.wl +
+        col("trans_sigma") * RiskWeights.trans + col("p_trans_multi") * RiskWeights.pTransMulti)
     // the game-grain report has no transfer leg at all (risk_ctrl_game_1d.py
     // emits only b/p sigma columns); keep its schema faithful
     if (hasTrans) scored else scored.drop("trans_sigma", "p_trans_multi")
@@ -148,11 +147,9 @@ object RiskCtrl {
 
   /** Full player report for one day-slice. */
   def playerOneDay(playerSummary1h: DataFrame, transSummary1h: DataFrame,
-      playerSummary1d: DataFrame, transSummary1d: DataFrame, slice: TaskSlice,
-      floors: SigmaFloors = SigmaFloors.player, rates: CountryRates = CountryRates(),
-      weights: RiskWeights = RiskWeights()): DataFrame =
+      playerSummary1d: DataFrame, transSummary1d: DataFrame, slice: TaskSlice): DataFrame =
     sigma(playerMeta(playerSummary1h, transSummary1h, playerSummary1d, transSummary1d, slice),
-      floors, rates, weights)
+      SigmaFloors.player)
 
   // -------------------------------------------------------------------------
   // risk_ctrl_game_1d (risk_ctrl_game_1d.py) — same shape at game grain,
@@ -189,11 +186,9 @@ object RiskCtrl {
       .na.fill(0.0)
   }
 
-  def gameOneDay(playerSummary1h: DataFrame, playerSummary1d: DataFrame, slice: TaskSlice,
-      floors: SigmaFloors = SigmaFloors.game, rates: CountryRates = CountryRates(),
-      weights: RiskWeights = RiskWeights()): DataFrame =
-    sigma(gameMeta(playerSummary1h, playerSummary1d, slice),
-      floors, rates, weights, hasTrans = false)
+  def gameOneDay(playerSummary1h: DataFrame, playerSummary1d: DataFrame,
+      slice: TaskSlice): DataFrame =
+    sigma(gameMeta(playerSummary1h, playerSummary1d, slice), SigmaFloors.game, hasTrans = false)
 
   // -------------------------------------------------------------------------
   // risk_ctrl_rtp_1d — the stateful alert ledger (risk_ctrl_rtp_1d.py).
@@ -203,8 +198,7 @@ object RiskCtrl {
 
   /** A7 snapshot at player x game grain + F1 flag cascade
     * (risk_ctrl_rtp_1d.py:77-118). */
-  def rtpSnapshot(playerSummary1h: DataFrame, slice: TaskSlice,
-      cfg: RtpConfig = RtpConfig()): DataFrame = {
+  def rtpSnapshot(playerSummary1h: DataFrame, slice: TaskSlice): DataFrame = {
     val d = slice.dateInt
     val snap = playerSummary1h.filter(slice.gameScope)
       .filter(col("summary_date") === d)
@@ -217,12 +211,8 @@ object RiskCtrl {
       .withColumn("summary_date", lit(d))
       .na.fill(0.0)
 
-    // Ordered masks: base rule sets both flags, unconditional override wins.
-    val risky = when(col("p_cur") >= cfg.profitUnconditional, 1)
-      .when(col("p_cur") >= cfg.profitThreshold &&
-        col("b_count") >= cfg.betCountThreshold &&
-        col("rtp_cur") >= cfg.rtpThreshold, 1)
-      .otherwise(0)
+    // one rule sets both flags; the ledger merge then throttles send_alert
+    val risky = RtpConfig.risky(col("p_cur"), col("b_count"), col("rtp_cur"))
     snap.withColumn("is_risky", risky).withColumn("send_alert", risky)
   }
 
@@ -239,8 +229,7 @@ object RiskCtrl {
     *  - send_alert suppressed when inside the cooldown or past the cap;
     *    surviving alerts bump alert_count and stamp last_alert_time=now.
     */
-  def rtpLedgerMerge(old: DataFrame, snapshot: DataFrame, now: java.sql.Timestamp,
-      cfg: RtpConfig = RtpConfig()): DataFrame = {
+  def rtpLedgerMerge(old: DataFrame, snapshot: DataFrame, now: java.sql.Timestamp): DataFrame = {
     val epoch = lit("1970-01-01 00:00:00").cast("timestamp")
     val nowLit = TaskSlice.stamp(now)
 
@@ -283,9 +272,9 @@ object RiskCtrl {
     // count bump, then stamp.
     val minutesSince = (unix_timestamp(nowLit) - unix_timestamp(col("last_alert_time"))) / 60.0
     merged
-      .withColumn("send_alert", when(minutesSince < cfg.timeToAlertMinutes, 0).otherwise(col("send_alert")))
+      .withColumn("send_alert", when(minutesSince < RtpConfig.timeToAlertMinutes, 0).otherwise(col("send_alert")))
       .withColumn("send_alert",
-        when(col("send_alert") === 1 && col("alert_count") >= cfg.alertLimit, 0).otherwise(col("send_alert")))
+        when(col("send_alert") === 1 && col("alert_count") >= RtpConfig.alertLimit, 0).otherwise(col("send_alert")))
       .withColumn("alert_count", when(col("send_alert") === 1, col("alert_count") + 1).otherwise(col("alert_count")))
       .withColumn("last_alert_time", when(col("send_alert") === 1, nowLit).otherwise(col("last_alert_time")))
       .select(col("summary_date") +: rtpKeys.map(col) :+ col("b_count") :+ col("b_cur") :+

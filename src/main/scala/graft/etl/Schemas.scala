@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.ops.Cols.eqOrAll
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
 
 /** Explicit schemas for the reference's data model (SURVEY §1.4, FIXTURES §A).
@@ -109,24 +109,36 @@ private[etl] case class TierCut(rows: Column, stamps: Seq[(String, Column)]) {
     stamps.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
 }
 
-/** Risk thresholds — mirrors report_config.py risk_ctrl_1d_config +
-  * player_summary_rtp_config verbatim. */
-case class RtpConfig(
-    profitThreshold: Double = 10000,
-    profitUnconditional: Double = 50000,
-    rtpThreshold: Double = 1,
-    betCountThreshold: Long = 10,
-    timeToAlertMinutes: Double = 1,
-    alertLimit: Int = 5)
+/** Risk thresholds (report_config.py risk_ctrl_1d_config +
+  * player_summary_rtp_config). Keep each type: an Int threshold would compare
+  * the decimal `profit_amount` differently from a Double one. */
+object RtpConfig {
+  val profitThreshold: Double = 10000
+  val profitUnconditional: Double = 50000
+  val rtpThreshold: Double = 1
+  val betCountThreshold: Long = 10
+  val timeToAlertMinutes: Double = 1
+  val alertLimit: Int = 5
+
+  /** F1: the risky flag of the player tiers and the rtp snapshot, as ordered
+    * masks (player_summary_5min.py:136-148): base rule, then the
+    * unconditional profit override. The LAST pandas mask is the FIRST `when`
+    * branch (later masks win in pandas; first match wins in `when`). */
+  def risky(profit: Column, betCount: Column, rtp: Column): Column =
+    when(profit >= profitUnconditional, 1)
+      .when(profit >= profitThreshold && betCount >= betCountThreshold && rtp >= rtpThreshold, 1)
+      .otherwise(0)
+}
 
 /** Sigma floors (report_config.py default_value_player / default_value_game). */
-case class SigmaFloors(
-    bWma: Double = 5000000, bWmasd: Double = 5000000,
-    pWma: Double = 1000000, pWmasd: Double = 1000000,
-    transWma: Double = 5000000, transWmasd: Double = 5000000)
+case class SigmaFloors(bWma: Double, bWmasd: Double, pWma: Double, pWmasd: Double,
+    transWma: Double, transWmasd: Double)
 
 object SigmaFloors {
-  val player: SigmaFloors = SigmaFloors()
+  val player: SigmaFloors = SigmaFloors(
+    bWma = 5000000, bWmasd = 5000000,
+    pWma = 1000000, pWmasd = 1000000,
+    transWma = 5000000, transWmasd = 5000000)
   val game: SigmaFloors = SigmaFloors(
     bWma = 50000000, bWmasd = 50000000,
     pWma = 10000000, pWmasd = 10000000,
@@ -134,8 +146,14 @@ object SigmaFloors {
 }
 
 /** Currency conversion rates by country (report_config.py country_rate). */
-case class CountryRates(rates: Map[String, Double] =
-    Map("THB" -> 0.05, "VND2" -> 1.0, "INR" -> 1.0, "PHP" -> 1.0))
+object CountryRates {
+  val rates: Map[String, Double] = Map("THB" -> 0.05, "VND2" -> 1.0, "INR" -> 1.0, "PHP" -> 1.0)
+}
 
 /** risk_score weights (report_config.py risk_score_multi). */
-case class RiskWeights(b: Double = 10, wl: Double = 50, trans: Double = 25, pTransMulti: Double = 100)
+object RiskWeights {
+  val b: Double = 10
+  val wl: Double = 50
+  val trans: Double = 25
+  val pTransMulti: Double = 100
+}

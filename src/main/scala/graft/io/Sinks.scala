@@ -115,10 +115,8 @@ object Sinks {
   }
 
   /** S3: plain append (task publication, first write of a table). */
-  def append(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Append)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
+  def append(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Append).parquet(path)
 
   /** Bucketed table write: pre-shuffles once at write time so every later
     * join/aggregation on `bucketCols` is co-located — no exchange in the

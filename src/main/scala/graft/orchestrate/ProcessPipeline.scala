@@ -56,7 +56,8 @@ object ProcessPipeline {
   /** Run the steps in order with per-step retry; on exhaustion, persist the
     * error to `errorLogPath` (append) + notify, and halt — mirroring the
     * reference's break-on-failure semantics. Returns the last step output on
-    * success, or the error on halt. */
+    * success, or the error on halt. A fatal error or an interrupt is not a
+    * step failure: it propagates at once, unretried and unrecorded. */
   def run(spark: SparkSession, pipelineName: String, steps: Seq[Step],
       errorLogPath: Option[String] = None,
       notifier: Notifier = LogNotifier,
@@ -72,7 +73,7 @@ object ProcessPipeline {
           data = s.process(data, spark)
           done = true
         } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             lastError = e
             attempt += 1
             if (attempt < tries) Thread.sleep(delayMs)

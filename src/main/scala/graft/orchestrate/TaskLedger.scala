@@ -135,15 +135,14 @@ object TaskLedger {
   }
 
   /** J9: init fan-out — report defs joined to the date structure on
-    * freq_type (init_main.py:47-68), stamped with the platform scope. */
-  def initTaskList(spark: SparkSession, reports: Seq[ReportDef], initDate: String,
-      platform: String = "ALL", siteCode: String = "ALL", gameCode: String = "ALL"): DataFrame = {
+    * freq_type (init_main.py:47-68), stamped with the 'ALL' platform scope. */
+  def initTaskList(spark: SparkSession, reports: Seq[ReportDef], initDate: String): DataFrame = {
     import spark.implicits._
     reports.toDF()
       .join(broadcast(dateStructure(spark, initDate)), Seq("freq_type"), "left")
-      .withColumn("platform", lit(platform))
-      .withColumn("site_code", lit(siteCode))
-      .withColumn("game_code", lit(gameCode))
+      .withColumn("platform", lit("ALL"))
+      .withColumn("site_code", lit("ALL"))
+      .withColumn("game_code", lit("ALL"))
       .withColumn("done", lit(0))
   }
 

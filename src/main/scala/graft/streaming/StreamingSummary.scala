@@ -24,13 +24,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingSummary {
 
+  /** How late an event may arrive and still count; it bounds window, dedup
+    * and join state. */
+  private val Watermark = "10 minutes"
+
   /** The trans_summary 5-min tier as a streaming aggregation. Input: a
     * STREAMING DataFrame shaped like player_value_log. Event time is
     * trade_time; late rows beyond the watermark are dropped (the batch
     * system's equivalent is the manual rerun cascade). The window() grouping
     * stays here, where the watermark needs it; the aggregates are the batch
     * tier's A1 battery. */
-  def transFiveMinStream(valueLog: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def transFiveMinStream(valueLog: DataFrame, watermark: String = Watermark): DataFrame =
     valueLog
       .filter(col("trade_status") === "SUCCESS")
       .withColumn("trade_time", col("trade_time").cast("timestamp"))
@@ -60,9 +64,9 @@ object StreamingSummary {
     * the same keys with the same values — idempotent, so the sink is
     * effectively exactly-once end to end (asserted across a real stop/restart
     * in StreamRecoverySpec). */
-  def startTransFiveMin(valueLog: DataFrame, tablePath: String, checkpoint: String,
-      watermark: String = "10 minutes"): org.apache.spark.sql.streaming.StreamingQuery =
-    transFiveMinStream(valueLog, watermark).writeStream
+  def startTransFiveMin(valueLog: DataFrame, tablePath: String,
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    transFiveMinStream(valueLog).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -82,41 +86,40 @@ object StreamingSummary {
     * retry) cannot double-count a trade. State is bounded by the watermark —
     * keys older than it are forgotten (a replay older than the watermark is
     * the batch rerun cascade's job instead). */
-  def dedupStream(log: DataFrame, keys: Seq[String], eventTimeCol: String,
-      watermark: String = "10 minutes"): DataFrame =
+  def dedupStream(log: DataFrame, keys: Seq[String], eventTimeCol: String): DataFrame =
     log
       .withColumn(eventTimeCol, col(eventTimeCol).cast("timestamp"))
-      .withWatermark(eventTimeCol, watermark)
+      .withWatermark(eventTimeCol, Watermark)
       .dropDuplicatesWithinWatermark(keys)
 
   /** Stream-stream interval join: each wallet transfer paired with the same
-    * player's game rounds within ±`tolerance` — the "wallet movement near
+    * player's game rounds within ±5 minutes — the "wallet movement near
     * game activity" correlation the reference computes by re-querying both
     * tables per task slice. Both sides carry watermarks and the join
     * condition bounds event-time distance, so state for either side is
     * dropped as soon as the other side's watermark passes the tolerance
     * window (bounded state, append-only output). */
-  def transNearRoundsStream(trans: DataFrame, rounds: DataFrame,
-      tolerance: String = "5 minutes", watermark: String = "10 minutes"): DataFrame = {
+  def transNearRoundsStream(trans: DataFrame, rounds: DataFrame): DataFrame = {
+    val tolerance = expr("INTERVAL 5 minutes")
     val t = trans
       .filter(col("trade_status") === "SUCCESS")
       .select(
         col("platform").as("t_platform"), col("player_name").as("t_player"),
         col("trade_type"), col("value").as("trade_value"),
         col("trade_time").cast("timestamp").as("trade_time"))
-      .withWatermark("trade_time", watermark)
+      .withWatermark("trade_time", Watermark)
     val r = rounds
       .filter(col("is_robot") === 0)
       .select(
         col("platform").as("r_platform"), col("player_name").as("r_player"),
         col("game_code"), col("bet"),
         col("round_time").cast("timestamp").as("round_time"))
-      .withWatermark("round_time", watermark)
+      .withWatermark("round_time", Watermark)
     t.join(r,
       col("t_platform") === col("r_platform") &&
         col("t_player") === col("r_player") &&
-        col("round_time") >= col("trade_time") - expr(s"INTERVAL $tolerance") &&
-        col("round_time") <= col("trade_time") + expr(s"INTERVAL $tolerance"))
+        col("round_time") >= col("trade_time") - tolerance &&
+        col("round_time") <= col("trade_time") + tolerance)
       .select(
         col("t_platform").as("platform"), col("t_player").as("player_name"),
         col("trade_type"), col("trade_value"), col("trade_time"),
@@ -154,8 +157,8 @@ object StreamingSummary {
   }
 
   /** Wire the throttle into a (streaming or batch) Dataset[AlertInput]. */
-  def throttleAlerts(inputs: Dataset[AlertInput], cooldownMinutes: Double = 1.0,
-      alertLimit: Int = 5): Dataset[AlertDecision] = {
+  def throttleAlerts(inputs: Dataset[AlertInput], cooldownMinutes: Double,
+      alertLimit: Int): Dataset[AlertDecision] = {
     import inputs.sparkSession.implicits._
     inputs
       .groupByKey(_.key)

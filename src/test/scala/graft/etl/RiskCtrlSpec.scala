@@ -27,7 +27,7 @@ class RiskCtrlSpec extends AnyFunSuite {
       // trans_sigma = 2; p_trans_multi = net/p = 9e7/9e7 = 1
       metaRow("b", "VND2", 1.0, 9e7, 9e7, 9e7, 9e7, 8e7, 5e6, 8e7, 5e6))
       .toDF(metaCols: _*)
-    val got = RiskCtrl.sigma(meta)
+    val got = RiskCtrl.sigma(meta, SigmaFloors.player)
       .select("player_name", "b_sigma", "p_sigma", "trans_sigma", "p_trans_multi", "risk_score")
       .collect().map(r => r.getString(0) -> r).toMap
 
@@ -54,7 +54,7 @@ class RiskCtrlSpec extends AnyFunSuite {
       metaRow("x", "VND2", 0.0, 3e6, 0.0, 9e6, 9e6, 2e6, 9e6, 9e6, 9e6))
       .toDF(metaCols: _*)
     // p_cur 3e6 >= substituted wma 1e6 -> p_sigma = (3e6-1e6)/9e6
-    val got = RiskCtrl.sigma(meta).select("p_sigma").head.getDouble(0)
+    val got = RiskCtrl.sigma(meta, SigmaFloors.player).select("p_sigma").head.getDouble(0)
     assert(math.abs(got - (3e6 - 1e6) / 9e6) < 1e-12)
   }
 
@@ -64,10 +64,25 @@ class RiskCtrlSpec extends AnyFunSuite {
     // so only the rate-independent p_trans_multi lane contributes: 1*100.
     val meta = Seq(metaRow("y", "XXX", 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0))
       .toDF(metaCols: _*)
-    val got = RiskCtrl.sigma(meta)
+    val got = RiskCtrl.sigma(meta, SigmaFloors.player)
       .select("b_sigma", "p_sigma", "trans_sigma", "risk_score").head
     assert(got.getDouble(0) === 0.0 && got.getDouble(1) === 0.0 && got.getDouble(2) === 0.0)
     assert(got.getDouble(3) === 100.0)
+  }
+
+  test("game report floors its wma with the game floors, not the player ones") {
+    // Seven prior days of b = 2e7: wma 2e7, sd 0, both under the game floors
+    // (5e7) -> b_sigma = (1e8 - 5e7) / 5e7 = 1. The player floors (5e6)
+    // would keep the wma and floor only the sd: (1e8 - 2e7) / 5e6 = 16.
+    val cols = Seq("platform", "site_code", "game_code", "country",
+      "b_amount", "profit_amount", "summary_date")
+    val today = Seq(("P0", "S0", "g0", "VND2", 1e8, 0.0, 20240110)).toDF(cols: _*)
+    val prior = (3 to 9).map(d => ("P0", "S0", "g0", "VND2", 2e7, 0.0, 20240100 + d)).toDF(cols: _*)
+    val got = RiskCtrl.gameOneDay(today, prior,
+      TestData.slice("2024-01-10 00:00:00", "2024-01-11 00:00:00", "1D"))
+      .select("b_sigma", "risk_score").head
+    assert(got.getDouble(0) === 1.0)
+    assert(got.getDouble(1) === 10.0)
   }
 
   test("rtp snapshot flags follow the ordered masks") {

@@ -48,6 +48,21 @@ class ProcessPipelineSpec extends AnyFunSuite {
     assert(row.getAs[String]("content").contains("db down"))
   }
 
+  test("an interrupt propagates at once: no retry, no error record") {
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val errPath = java.nio.file.Files.createTempDirectory("graft_err").toString + "/error_log"
+    val notifier = new Notifier {
+      override def send(title: String, e: PipelineError): Unit = fail("an interrupt is not a step failure")
+    }
+    intercept[InterruptedException] {
+      ProcessPipeline.run(spark, "producer", Seq(
+        step("wait") { (_, _) => attempts.incrementAndGet(); throw new InterruptedException("stop") }),
+        errorLogPath = Some(errPath), notifier = notifier, tries = 3, delayMs = 1)
+    }
+    assert(attempts.get() === 1)
+    assert(!new java.io.File(errPath).exists())
+  }
+
   test("dep gate bypass: 5min and pass-listed assignees flow through matched") {
     import spark.implicits._
     def ts(s: String) = java.sql.Timestamp.valueOf(s)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.etl.TestData
+import graft.etl.{RtpConfig, TestData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -157,7 +157,8 @@ class StreamingSpec extends AnyFunSuite {
       AlertInput("k1", base + 12 * minute, isRisky = false),    // reset
       AlertInput("k1", base + 14 * minute, isRisky = true))     // fires again (count 1)
       .toDS()
-    val out = StreamingSummary.throttleAlerts(inputs).collect().sortBy(_.eventTimeMillis)
+    val out = StreamingSummary.throttleAlerts(inputs,
+      RtpConfig.timeToAlertMinutes, RtpConfig.alertLimit).collect().sortBy(_.eventTimeMillis)
     assert(out.map(_.sendAlert).toSeq ===
       Seq(true, false, true, true, true, true, false, false, true))
     assert(out.last.alertCount === 1)
